@@ -360,7 +360,7 @@ def replication_steady_state(spark) -> dict:
     """Steady-state replication latency (VERDICT r7 #8): a backlog of
     ``SPARK_GRAFT_REPL_DIFFS`` minutely diff files (default 400; set 10000
     for the full long-run sweep) drains through
-    ``run_replication_stream_txn`` as bounded micro-batches (25 diffs each)
+    ``run_replication_stream`` as bounded micro-batches (25 diffs each)
     with transactional compaction every 4 batches — the production loop:
     streaming checkpoint = consumed-file watermark, one atomic MERGE commit
     per batch, OPTIMIZE interleaved with ingest.
@@ -377,7 +377,7 @@ def replication_steady_state(spark) -> dict:
     import uuid
 
     from changesetmd_spark.sinks.txn_table import TxnTable
-    from changesetmd_spark.streaming import run_replication_stream_txn
+    from changesetmd_spark.streaming import run_replication_stream
 
     n_diffs = int(os.environ.get("SPARK_GRAFT_REPL_DIFFS", "400"))
     per_diff_cs = 5
@@ -421,14 +421,14 @@ def replication_steady_state(spark) -> dict:
         half = n_diffs // 2
         for s in range(1, half + 1):
             write_diff(s)
-        run_replication_stream_txn(
+        run_replication_stream(
             spark, src, table_dir, ckpt,
             max_files_per_trigger=25, compact_every=4,
         )
         for s in range(half + 1, n_diffs + 1):
             write_diff(s)
         t0 = time.perf_counter()
-        run_replication_stream_txn(
+        run_replication_stream(
             spark, src, table_dir, ckpt,
             max_files_per_trigger=25, compact_every=4,
         )

@@ -81,7 +81,7 @@ _BT_Y_BCAST_MAX_CELLS = 512
 # per-element term rounds exactly once and the running sum adds in the
 # same sequence as the JVM's sequential left fold, so every distance and
 # cosine is IEEE-bit-identical to the expression form (pinned by
-# tests/test_similarity_ann.py::test_bitext_ivf_numpy_arm_equivalence).
+# tests/test_r9_ops.py::test_bitext_ivf_numpy_arm_equivalence).
 # Gated to _BT_Y_BCAST_MAX_CELLS < K <= _BT_SEED_BCAST_MAX: below, the
 # broadcast arm's plan (the bench regime) is untouched; above, the seed
 # table no longer fits the driver and the shuffle-join arm takes over.
@@ -124,8 +124,18 @@ def _np_route_factory(
             B = len(ids)
             if B == 0:
                 continue
+            vecs = batch.column(1)
+            dims = vecs.value_lengths().fill_null(-1).to_numpy()
+            if (dims != CC.shape[1]).any():
+                # a ragged or NULL vector would shift every later row's
+                # values under reshape(B, -1): refuse instead of misrouting
+                raise ValueError(
+                    f"embedding batch of {B} rows holds vectors of lengths "
+                    f"{sorted(set(dims.tolist()))} (-1 = NULL), expected "
+                    f"{CC.shape[1]}"
+                )
             X = np.asarray(
-                batch.column(1).flatten().to_numpy(zero_copy_only=False)
+                vecs.flatten().to_numpy(zero_copy_only=False)
             ).reshape(B, -1)
             D = _np_fold_l2sq(X, CC)
             order = np.argsort(D, axis=1, kind="stable")[:, :probe_eff]

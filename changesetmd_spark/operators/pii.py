@@ -25,7 +25,7 @@ Determinism / oracle parity:
 * Spark ``regexp_replace`` is replace-all by default; the DuckDB oracle
   passes the ``'g'`` flag explicitly;
 * the corpus hash folds each doc's md5 into a 60-bit integer
-  (``conv(substr(md5, 1, 15), 16, 10)`` — see dedup.py:407) and
+  (``conv(substr(md5, 1, 15), 16, 10)`` — ``dedup._md5_long``) and
   combines with ``bit_xor``: commutative, associative, overflow-free,
   so partition order cannot affect it.
 
@@ -43,16 +43,12 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load_table
+from .dedup import _md5_long
 
 # Patterns restricted to the Java-regex ∩ RE2 common subset.
 _EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _PHONE = r"\d{3}-\d{3}-\d{4}"
 _IPV4 = r"(\d{1,3}\.)\d{1,3}\.\d{1,3}\.\d{1,3}"
-
-
-def _md5_long(col):
-    """60-bit integer fold of md5 (same trick as dedup.py:407)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 @register(

@@ -102,21 +102,31 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 # a new driver round updates the order mechanically.
 WITNESSED_ROUNDS: dict[str, tuple[int, ...]] = {
     "q10_returned_item_revenue": (14,),
+    "q12_shipping_delay_priority": (17, 18),
     "q13_order_count_distribution": (15,),
     "q14_promo_revenue_share": (14,),
+    "q16_supplier_part_variety": (17, 18),
     "q18_large_volume_orders": (15,),
+    "q19_disjunctive_revenue": (17, 18),
     "q1_pricing_summary": (1, 2, 3, 4, 5, 6, 8, 11),
+    "q21_suppliers_kept_waiting": (17, 18),
+    "q22_dormant_high_balance": (17, 18),
     "q3_top_revenue_orders": (1, 2, 3, 4, 5, 6, 8, 11),
+    "q4_order_priority_check": (17, 18),
     "q5_revenue_by_nation": (1, 2, 3, 4, 5, 6, 8, 11),
+    "q6_forecast_revenue": (17, 18),
     "q7_nation_volume_shipping": (14,),
-    "q_adamic_adar_linkpred": (16,),
+    "q9_product_type_profit": (17, 18),
+    "q_acf_profile": (17, 18),
+    "q_adamic_adar_linkpred": (16, 17, 18),
     "q_ann_recall_audit": (10, 13, 16),
     "q_ann_verify_rerank": (6, 9, 12, 16),
     "q_anti_join_dormant_customers": (1, 2, 3, 4, 5, 6, 8, 12),
     "q_argmin_supplier_per_part": (15,),
+    "q_asof_advised": (17, 18),
     "q_asof_purchase_last_view": (1, 2, 3, 4, 6, 9, 12, 13),
     "q_asof_two_phase_scalable": (13, 14),
-    "q_association_rules": (13, 16),
+    "q_association_rules": (13, 16, 17, 18),
     "q_autocorr_lag1": (15,),
     "q_bbox_area_filter": (2, 3, 4, 5, 8, 11),
     "q_bbox_area_topk": (1, 2, 3, 4, 5, 6, 8, 11),
@@ -126,11 +136,11 @@ WITNESSED_ROUNDS: dict[str, tuple[int, ...]] = {
     "q_bitext_margin_mining": (9, 10, 13, 16),
     "q_bitext_margin_mining_ivf": (10, 13, 16),
     "q_bloom_prefilter_join": (8, 11),
-    "q_bm25_keyword_search": (2, 3, 4, 5, 8, 11),
+    "q_bm25_keyword_search": (2, 3, 4, 5, 8, 11, 17, 18),
     "q_bpe_train_step": (9, 13),
     "q_brier_decomposition": (16,),
     "q_calibration_ece_bins": (11, 14, 16),
-    "q_cdc_chunk_dedup": (7, 10, 14),
+    "q_cdc_chunk_dedup": (7, 10, 14, 17, 18),
     "q_changeset_comments_explode": (1, 2, 3, 4, 5, 6, 8, 11),
     "q_changeset_ingest_normalize": (1, 2, 3, 4, 5, 6, 8, 11),
     "q_changeset_join_comments": (1, 2, 3, 4, 5, 6, 8, 11),
@@ -139,35 +149,37 @@ WITNESSED_ROUNDS: dict[str, tuple[int, ...]] = {
     "q_cluster_silhouette": (15, 16),
     "q_cohens_kappa_langid": (15,),
     "q_cohort_retention": (7, 11),
-    "q_containment_pairs": (14,),
-    "q_contamination_ngram_overlap": (5, 8, 11),
+    "q_containment_pairs": (14, 17, 18),
+    "q_contamination_ngram_overlap": (5, 8, 11, 17, 18),
     "q_context_window_plan": (13,),
     "q_countmin_estimates": (9, 10, 15),
     "q_countmin_sketch_only": (10, 15),
-    "q_cross_source_leakage": (12,),
+    "q_cross_source_leakage": (12, 17, 18),
     "q_cube_order_status_priority": (1, 2, 3, 4, 5, 6, 8, 12),
     "q_cusum_changepoint": (15,),
+    "q_data_quality_expectations": (17, 18),
     "q_dedup_exact": (1, 2, 3, 4, 5, 6, 8, 11, 16),
     "q_dedup_exact_counts": (1, 2, 3, 4, 5, 7, 10, 14, 16),
-    "q_dedup_groups": (2, 3, 4, 5, 6, 8, 9, 12),
+    "q_dedup_groups": (2, 3, 4, 5, 6, 8, 9, 12, 17, 18),
     "q_dedup_threshold_sweep": (11, 16),
     "q_distinct_counts": (1, 2, 3, 4, 5, 6, 8, 12),
     "q_distinct_ngram_diversity": (12, 13, 16),
+    "q_domain_rollup": (17, 18),
     "q_doremi_mixture_step": (12, 13),
     "q_dsir_importance_weights": (7, 10, 14),
-    "q_dup_cluster_histogram": (13,),
+    "q_dup_cluster_histogram": (13, 17, 18),
     "q_duplicate_substring_spans": (7, 10, 13, 16),
     "q_ease_grid_project": (13,),
     "q_effective_sample_size": (15,),
     "q_embedding_ann_checked": (6, 9, 12, 16),
     "q_embedding_ann_ivf": (1, 7, 9, 12),
     "q_embedding_ann_ivf_checked": (8, 11, 15, 16),
-    "q_embedding_ann_lsh": (1, 7, 9, 12),
+    "q_embedding_ann_lsh": (1, 7, 9, 12, 18),
     "q_embedding_binary_hamming": (12, 16),
     "q_embedding_centroid_per_label": (1, 2, 3, 4, 7, 9, 12, 16),
     "q_embedding_dim_moments": (12, 13, 16),
     "q_embedding_int8_quantize": (9, 12),
-    "q_embedding_neardup_cosine": (1, 7, 9, 11, 15, 16),
+    "q_embedding_neardup_cosine": (1, 7, 9, 11, 15, 16, 18),
     "q_embedding_pca_power": (7, 9, 12, 16),
     "q_embedding_pq_adc": (8, 11, 15, 16),
     "q_embedding_random_projection": (8, 11, 16),
@@ -182,25 +194,27 @@ WITNESSED_ROUNDS: dict[str, tuple[int, ...]] = {
     "q_hard_negative_mining": (8, 11, 16),
     "q_heavy_hitter_terms": (7, 10, 15),
     "q_hhi_concentration": (15,),
-    "q_hits_bipartite": (14, 16),
+    "q_hits_bipartite": (14, 16, 17, 18),
     "q_hourly_ohlc": (14,),
-    "q_hybrid_rrf_search": (11,),
-    "q_incremental_hash_dedup": (11,),
-    "q_incremental_minhash_neardup": (12, 13),
+    "q_hybrid_rrf_search": (11, 17, 18),
+    "q_incremental_hash_dedup": (11, 17, 18),
+    "q_incremental_minhash_neardup": (12, 13, 17, 18),
     "q_interarrival_stats": (15,),
     "q_intersect_segments": (1, 2, 3, 4, 5, 8, 12),
-    "q_item_cooccurrence": (7, 10, 14, 16),
+    "q_item_cooccurrence": (7, 10, 14, 16, 17, 18),
     "q_ivf_index_maintenance": (16,),
+    "q_jensen_shannon_drift": (17, 18),
     "q_json_typed_extract": (6, 9, 13),
     "q_jsonl_ingest_audit": (11,),
     "q_kanonymity_risk": (14,),
-    "q_kcore_items": (8, 11, 16),
+    "q_kcore_items": (8, 11, 16, 17, 18),
+    "q_kendall_tau_hourly": (17, 18),
     "q_kmeans_assign_update": (7, 9, 12, 16),
     "q_kneser_ney_bigram": (14,),
     "q_knn_label_accuracy": (16,),
     "q_ks_value_drift": (14, 15),
     "q_label_balance_downsample": (13,),
-    "q_label_propagation": (8, 11, 16),
+    "q_label_propagation": (8, 11, 16, 17, 18),
     "q_ldiversity_risk": (15,),
     "q_length_bucket_packing": (14,),
     "q_like_part_types": (2, 3, 4, 7, 10, 15),
@@ -214,7 +228,7 @@ WITNESSED_ROUNDS: dict[str, tuple[int, ...]] = {
     "q_matryoshka_truncation_audit": (11,),
     "q_max_drawdown": (15,),
     "q_media_shard_manifest": (7, 9, 12),
-    "q_minhash_estimate_error_audit": (10, 11, 13),
+    "q_minhash_estimate_error_audit": (10, 11, 13, 17, 18),
     "q_minhash_lsh_candidates": (1, 2, 3, 4, 5, 7, 10, 14),
     "q_minhash_lsh_checked": (5, 6, 8, 10, 13, 16),
     "q_mmr_diversified_rerank": (11, 16),
@@ -223,27 +237,29 @@ WITNESSED_ROUNDS: dict[str, tuple[int, ...]] = {
     "q_multimodal_decode": (1, 2, 3, 4, 5, 8, 11, 12),
     "q_multimodal_decode_real": (13,),
     "q_multimodal_png_stats": (15,),
+    "q_multimodal_qoi_stats": (17, 18),
     "q_multimodal_resize": (12,),
     "q_multitouch_attribution": (13, 14),
-    "q_neardup_canonical": (8, 9, 12),
+    "q_neardup_canonical": (8, 9, 12, 17, 18),
     "q_neardup_verify_jaccard": (2, 3, 4, 5, 7, 10, 14, 16),
     "q_ngram_jaccard_pairs": (1, 2, 3, 4, 5, 7, 10, 14, 16),
     "q_ngram_novelty": (7, 10, 14, 16),
     "q_orders_per_month": (1, 2, 3, 4, 7, 10, 15),
     "q_outer_join_order_counts": (1, 2, 3, 4, 5, 6, 8, 12),
-    "q_pagerank_items": (7, 10, 14, 16),
+    "q_pagerank_items": (7, 10, 14, 16, 17, 18),
     "q_pareto_frontier_docs": (15,),
     "q_part_value_share": (15,),
     "q_phrase_search": (9, 12),
     "q_pii_redaction_stats": (9, 12),
-    "q_pipeline_curate_end_to_end": (5, 6, 8, 11),
+    "q_pipeline_curate_end_to_end": (5, 6, 8, 11, 17),
     "q_pivot_status_by_priority": (1, 2, 3, 4, 6, 9, 12),
     "q_pmi_collocations": (14,),
-    "q_ppjoin_similar_docs": (9, 10, 14),
+    "q_ppjoin_similar_docs": (9, 10, 14, 17, 18),
     "q_pps_systematic_sample": (9, 12),
-    "q_prf_expansion_terms": (13,),
+    "q_prf_expansion_terms": (13, 17, 18),
     "q_priority_sample_topk": (10, 15),
     "q_psi_value_drift": (15,),
+    "q_quality_classifier_train_step": (17, 18),
     "q_quality_percentile_gate": (8, 11),
     "q_quality_rule_attribution": (11,),
     "q_rag_chunk_overlap": (7, 10, 14),
@@ -254,8 +270,8 @@ WITNESSED_ROUNDS: dict[str, tuple[int, ...]] = {
     "q_readme_envelope_containment": (2, 3, 4, 5, 6, 8, 11),
     "q_referential_integrity_audit": (15, 16),
     "q_rendezvous_shard_balance": (15,),
-    "q_retrieval_mrr_eval": (14,),
-    "q_retrieval_ndcg_eval": (12, 13),
+    "q_retrieval_mrr_eval": (14, 17, 18),
+    "q_retrieval_ndcg_eval": (12, 13, 17, 18),
     "q_rollup_nation_segment": (1, 2, 3, 4, 5, 6, 8, 12),
     "q_salted_join_skewed_types": (1, 7, 10, 15),
     "q_scd2_priority_history": (9, 12),
@@ -267,10 +283,11 @@ WITNESSED_ROUNDS: dict[str, tuple[int, ...]] = {
     "q_sequence_packing": (7, 10, 14),
     "q_series_ewma": (7, 10, 15),
     "q_series_linear_trend": (7, 10, 15),
+    "q_session_advised": (17, 18),
     "q_session_two_phase_scalable": (13, 14),
     "q_set_ops_customer_cohorts": (1, 2, 3, 4, 5, 6, 8, 12),
     "q_simhash_checked": (5, 6, 8, 11),
-    "q_simhash_near_dup": (1, 2, 3, 4, 5, 7, 10, 14),
+    "q_simhash_near_dup": (1, 2, 3, 4, 5, 7, 10, 14, 17, 18),
     "q_sketch_cardinality_and_quantiles": (1, 7, 10, 15),
     "q_skew_advised_salted_join": (12,),
     "q_skew_key_advisor": (11,),
@@ -294,6 +311,7 @@ WITNESSED_ROUNDS: dict[str, tuple[int, ...]] = {
     "q_stream_tumbling_hourly": (6, 9, 13),
     "q_subsample_stability_ci": (15,),
     "q_table_profile": (9, 12),
+    "q_tcloseness_risk": (17, 18),
     "q_temperature_mixture": (7, 10, 15),
     "q_temporal_split_audit": (15,),
     "q_text_blocklist_scrub": (5, 8, 11),
@@ -301,20 +319,22 @@ WITNESSED_ROUNDS: dict[str, tuple[int, ...]] = {
     "q_text_lang_id_confusion": (1, 2, 3, 4, 5, 7, 10, 14),
     "q_text_quality": (1, 2, 3, 4, 5, 6, 8, 11),
     "q_text_quality_by_source": (1, 2, 3, 4, 5, 7, 10, 14),
-    "q_text_repetition_quality": (5, 8, 11, 12, 13, 14),
+    "q_text_repetition_quality": (5, 8, 11, 12, 13, 14, 17),
     "q_text_token_budget_by_source": (5, 7, 10, 14),
     "q_text_token_stats": (2, 3, 4, 5, 7, 10, 14),
-    "q_tfidf_top_terms": (2, 3, 4, 5, 8, 11),
+    "q_tfidf_top_terms": (2, 3, 4, 5, 8, 11, 17, 18),
+    "q_theil_index_concentration": (17, 18),
     "q_time_gapfill_interpolate": (7, 10, 15),
     "q_time_gapfill_locf": (7, 10, 15),
     "q_token_len_histogram": (7, 10, 14),
     "q_tokenizer_fertility": (15, 16),
     "q_train_test_split": (2, 3, 4, 5, 8, 11),
-    "q_triangle_count": (7, 10, 14, 16),
+    "q_transition_entropy": (17, 18),
+    "q_triangle_count": (7, 10, 14, 16, 17, 18),
     "q_txn_change_feed": (12,),
     "q_txn_merge_snapshot": (6, 9, 13),
     "q_type_transition_matrix": (7, 11),
-    "q_unigram_drift_kl": (12,),
+    "q_unigram_drift_kl": (12, 17, 18),
     "q_unigram_prob_mass": (7, 10, 14),
     "q_unpivot_quantity_price": (1, 2, 3, 4, 7, 10, 15),
     "q_upsert_last_write_wins": (1, 2, 3, 4, 5, 6, 8, 11),
@@ -331,7 +351,7 @@ WITNESSED_ROUNDS: dict[str, tuple[int, ...]] = {
     "q_window_topk_orders_per_customer": (1, 2, 3, 4, 5, 6, 8, 12),
     "q_window_trailing_hour_sum": (6, 9, 13),
     "q_window_tumbling_hourly": (6, 9, 13),
-    "q_winnowed_fingerprints": (7, 10, 13, 16),
+    "q_winnowed_fingerprints": (7, 10, 13, 16, 17, 18),
     "q_winsorized_stats": (14,),
     "q_zipf_fit_audit": (12, 16),
     "q_zorder_layout": (8, 11),
@@ -370,7 +390,7 @@ WITNESSED_FINGERPRINTS: dict[str, str] = {
     "q7_nation_volume_shipping": "a60d0221c1ec",
     "q9_product_type_profit": "eed921ed75dc",
     "q_acf_profile": "9f5a0182bcc4",
-    "q_adamic_adar_linkpred": "baadddde1f03",
+    "q_adamic_adar_linkpred": "900d75f5d65e",
     "q_ann_recall_audit": "5200ea1d4126",
     "q_ann_verify_rerank": "0bbf3dea0ed3",
     "q_anti_join_dormant_customers": "26563d35570d",
@@ -378,7 +398,7 @@ WITNESSED_FINGERPRINTS: dict[str, str] = {
     "q_asof_advised": "3094a126cb2b",
     "q_asof_purchase_last_view": "b1fdf5f673b3",
     "q_asof_two_phase_scalable": "6237fa649e5e",
-    "q_association_rules": "daac380ceca6",
+    "q_association_rules": "e1375a5c08a0",
     "q_autocorr_lag1": "da5d7ee1fbcc",
     "q_bbox_area_filter": "e115f940f1c9",
     "q_bbox_area_topk": "7e12375eb8e2",
@@ -388,11 +408,11 @@ WITNESSED_FINGERPRINTS: dict[str, str] = {
     "q_bitext_margin_mining": "7b132a5f56e7",
     "q_bitext_margin_mining_ivf": "7f228fec7adb",
     "q_bloom_prefilter_join": "169b7231bb6c",
-    "q_bm25_keyword_search": "603e2228aebe",
+    "q_bm25_keyword_search": "5e5e036e10da",
     "q_bpe_train_step": "c04762ebe930",
     "q_brier_decomposition": "9f290985aeb8",
     "q_calibration_ece_bins": "db7f7e5b739e",
-    "q_cdc_chunk_dedup": "2d9ef2dd35b9",
+    "q_cdc_chunk_dedup": "abc7e54a7a90",
     "q_changeset_comments_explode": "e28cdf81faff",
     "q_changeset_ingest_normalize": "91a73d69bd16",
     "q_changeset_join_comments": "67e155a3df90",
@@ -401,37 +421,37 @@ WITNESSED_FINGERPRINTS: dict[str, str] = {
     "q_cluster_silhouette": "6387c07a69e0",
     "q_cohens_kappa_langid": "bcdf0d9dfec0",
     "q_cohort_retention": "0e48ae730a60",
-    "q_containment_pairs": "5f082ca0cb16",
-    "q_contamination_ngram_overlap": "007fd8327408",
+    "q_containment_pairs": "3b34327c435e",
+    "q_contamination_ngram_overlap": "db3520e8a12b",
     "q_context_window_plan": "55c715982d63",
     "q_countmin_estimates": "8797ed161fdc",
     "q_countmin_sketch_only": "fb8a34413f0a",
-    "q_cross_source_leakage": "f120be5b52b6",
+    "q_cross_source_leakage": "0ccb2c609a2a",
     "q_cube_order_status_priority": "51c528e2fa11",
     "q_cusum_changepoint": "fe9940e63ee7",
     "q_data_quality_expectations": "23580ba13166",
     "q_dedup_exact": "69f8810960ce",
     "q_dedup_exact_counts": "ce5c6051cf4e",
-    "q_dedup_groups": "178c907f8716",
+    "q_dedup_groups": "6dae2fbb6227",
     "q_dedup_threshold_sweep": "30d99b9c0411",
     "q_distinct_counts": "b7644aa98416",
     "q_distinct_ngram_diversity": "791b004f0476",
     "q_domain_rollup": "0c243eda92bb",
     "q_doremi_mixture_step": "e9a8fa0524cb",
     "q_dsir_importance_weights": "e894c9ce8d97",
-    "q_dup_cluster_histogram": "8c20111ed665",
+    "q_dup_cluster_histogram": "231cd29829a9",
     "q_duplicate_substring_spans": "e5d5d3bedaed",
     "q_ease_grid_project": "d99b140e38da",
     "q_effective_sample_size": "0455340a4647",
     "q_embedding_ann_checked": "e1599ac4fe95",
     "q_embedding_ann_ivf": "77f3261e726c",
     "q_embedding_ann_ivf_checked": "1165a0f691fc",
-    "q_embedding_ann_lsh": "2b316a9d38c5",
+    "q_embedding_ann_lsh": "cb9e615fadd0",
     "q_embedding_binary_hamming": "062b54315542",
     "q_embedding_centroid_per_label": "12de276ffea1",
     "q_embedding_dim_moments": "0ad1e8bf51e7",
     "q_embedding_int8_quantize": "7e2ee87b3d9e",
-    "q_embedding_neardup_cosine": "169c5341bb9e",
+    "q_embedding_neardup_cosine": "c2de78769650",
     "q_embedding_pca_power": "86bc9ea39f9b",
     "q_embedding_pq_adc": "91faa58703f9",
     "q_embedding_random_projection": "1fef7198eccd",
@@ -446,27 +466,27 @@ WITNESSED_FINGERPRINTS: dict[str, str] = {
     "q_hard_negative_mining": "b2ab16181eb9",
     "q_heavy_hitter_terms": "7da4342493b1",
     "q_hhi_concentration": "7fac3faf1886",
-    "q_hits_bipartite": "12bc4a6f08c4",
+    "q_hits_bipartite": "e452283cacb0",
     "q_hourly_ohlc": "8bc8718a7dfa",
-    "q_hybrid_rrf_search": "eecc54f2b5c4",
-    "q_incremental_hash_dedup": "2950e32a06da",
-    "q_incremental_minhash_neardup": "d6e1bf0823a4",
+    "q_hybrid_rrf_search": "d3f1f35969e9",
+    "q_incremental_hash_dedup": "a17f4089aff6",
+    "q_incremental_minhash_neardup": "b5b24d3de914",
     "q_interarrival_stats": "42fe74ad3c51",
     "q_intersect_segments": "d91bac44493f",
-    "q_item_cooccurrence": "60e7a89f148c",
+    "q_item_cooccurrence": "a0e128e561d9",
     "q_ivf_index_maintenance": "6a0454853522",
     "q_jensen_shannon_drift": "455173970e6d",
     "q_json_typed_extract": "c88841a31644",
     "q_jsonl_ingest_audit": "2f2bcb96b9b1",
     "q_kanonymity_risk": "3b19a6b60514",
-    "q_kcore_items": "d43a0e8dc068",
+    "q_kcore_items": "6e875abe214f",
     "q_kendall_tau_hourly": "b9446ab8cfdf",
     "q_kmeans_assign_update": "1fe8a61ef101",
     "q_kneser_ney_bigram": "bf7ea302fa77",
     "q_knn_label_accuracy": "a49ce254e539",
     "q_ks_value_drift": "29cc66620faa",
     "q_label_balance_downsample": "a691146629bd",
-    "q_label_propagation": "fc529ec2d258",
+    "q_label_propagation": "76acd73d3621",
     "q_ldiversity_risk": "4ee1510783e8",
     "q_length_bucket_packing": "5f5c45809b4e",
     "q_like_part_types": "9d4e6f50083c",
@@ -480,7 +500,7 @@ WITNESSED_FINGERPRINTS: dict[str, str] = {
     "q_matryoshka_truncation_audit": "a7836b0b556b",
     "q_max_drawdown": "9b3e7bf50907",
     "q_media_shard_manifest": "75af061d14f8",
-    "q_minhash_estimate_error_audit": "e9b5f216e257",
+    "q_minhash_estimate_error_audit": "18138330e65d",
     "q_minhash_lsh_candidates": "c0b664190cc7",
     "q_minhash_lsh_checked": "bfad5406219e",
     "q_mmr_diversified_rerank": "56f0d42ee9db",
@@ -492,23 +512,23 @@ WITNESSED_FINGERPRINTS: dict[str, str] = {
     "q_multimodal_qoi_stats": "83382fd79331",
     "q_multimodal_resize": "7f480e96df0f",
     "q_multitouch_attribution": "d74ed0f4a02f",
-    "q_neardup_canonical": "e2cad7f30322",
+    "q_neardup_canonical": "373eca753a62",
     "q_neardup_verify_jaccard": "b04fc8e4c144",
     "q_ngram_jaccard_pairs": "9a0b3e944b9a",
     "q_ngram_novelty": "3d27bd2010d0",
     "q_orders_per_month": "2e7c84bb0ae9",
     "q_outer_join_order_counts": "149621fc6479",
-    "q_pagerank_items": "9a1598b92b5a",
+    "q_pagerank_items": "288257f435ea",
     "q_pareto_frontier_docs": "93ed5f9cff76",
     "q_part_value_share": "8ca62c27496e",
     "q_phrase_search": "7517698e473e",
     "q_pii_redaction_stats": "f5899ceda80a",
-    "q_pipeline_curate_end_to_end": "619268fad749",
+    "q_pipeline_curate_end_to_end": "99d545881fb5",
     "q_pivot_status_by_priority": "8de452afe200",
     "q_pmi_collocations": "6cf695c72413",
-    "q_ppjoin_similar_docs": "71cf21bce319",
+    "q_ppjoin_similar_docs": "c434cea26b24",
     "q_pps_systematic_sample": "4d89e3d292ab",
-    "q_prf_expansion_terms": "2c975dc99f67",
+    "q_prf_expansion_terms": "a61cd958b5f2",
     "q_priority_sample_topk": "99c7ac328f46",
     "q_psi_value_drift": "875b0c4aff87",
     "q_quality_classifier_train_step": "332279d63718",
@@ -522,8 +542,8 @@ WITNESSED_FINGERPRINTS: dict[str, str] = {
     "q_readme_envelope_containment": "e5e856460749",
     "q_referential_integrity_audit": "2446aa1bd816",
     "q_rendezvous_shard_balance": "062149072c91",
-    "q_retrieval_mrr_eval": "90d9fee5d164",
-    "q_retrieval_ndcg_eval": "f6b9f5d76920",
+    "q_retrieval_mrr_eval": "95cf457d110d",
+    "q_retrieval_ndcg_eval": "385a6a129768",
     "q_rollup_nation_segment": "fcaca532c4ef",
     "q_salted_join_skewed_types": "acf413b1e8a6",
     "q_scd2_priority_history": "715bbb6d6636",
@@ -539,7 +559,7 @@ WITNESSED_FINGERPRINTS: dict[str, str] = {
     "q_session_two_phase_scalable": "d53d1a69ee72",
     "q_set_ops_customer_cohorts": "c1752c02ad53",
     "q_simhash_checked": "5dbf1427fcac",
-    "q_simhash_near_dup": "0f7849b5fcd3",
+    "q_simhash_near_dup": "640e7bedb6fa",
     "q_sketch_cardinality_and_quantiles": "cee511b11934",
     "q_skew_advised_salted_join": "23c88262d56b",
     "q_skew_key_advisor": "e36841a71795",
@@ -571,10 +591,10 @@ WITNESSED_FINGERPRINTS: dict[str, str] = {
     "q_text_lang_id_confusion": "b204de6407b2",
     "q_text_quality": "ec87d2dd2a86",
     "q_text_quality_by_source": "1ca2f822686d",
-    "q_text_repetition_quality": "0456b7a7d879",
+    "q_text_repetition_quality": "f4dc94f0676c",
     "q_text_token_budget_by_source": "f4654a67165a",
     "q_text_token_stats": "07d0fcb5eba1",
-    "q_tfidf_top_terms": "c87b20d513c1",
+    "q_tfidf_top_terms": "82c31473b540",
     "q_theil_index_concentration": "8ae1973e516e",
     "q_time_gapfill_interpolate": "07691491e86c",
     "q_time_gapfill_locf": "a5d2a5666d50",
@@ -582,11 +602,11 @@ WITNESSED_FINGERPRINTS: dict[str, str] = {
     "q_tokenizer_fertility": "3f0ba0b22f54",
     "q_train_test_split": "cec82ef6be65",
     "q_transition_entropy": "ca23a1268af8",
-    "q_triangle_count": "b6ae6c79140f",
+    "q_triangle_count": "16a7dd98b3fe",
     "q_txn_change_feed": "2d2d27434982",
     "q_txn_merge_snapshot": "37e57683a294",
     "q_type_transition_matrix": "8c2ffed88a00",
-    "q_unigram_drift_kl": "456c04fb22ea",
+    "q_unigram_drift_kl": "ac44bcdaf474",
     "q_unigram_prob_mass": "956bc7deacf6",
     "q_unpivot_quantity_price": "019a7ec3945b",
     "q_upsert_last_write_wins": "f4f914c525c2",
@@ -603,7 +623,7 @@ WITNESSED_FINGERPRINTS: dict[str, str] = {
     "q_window_topk_orders_per_customer": "9bd5767bcdc7",
     "q_window_trailing_hour_sum": "c63920d26d47",
     "q_window_tumbling_hourly": "1d16e1c77c37",
-    "q_winnowed_fingerprints": "9d5b373709e3",
+    "q_winnowed_fingerprints": "d6bf533e7fcb",
     "q_winsorized_stats": "3fb7c38862c2",
     "q_zipf_fit_audit": "9ca3d9a7ac88",
     "q_zorder_layout": "562293014cd1",

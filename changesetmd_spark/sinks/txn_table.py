@@ -63,32 +63,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DataType,
-    DateType,
-    MapType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DateType, StructField, StructType
 
-from .upsert import latest_per_key
+from .upsert import _contains_map, _partition_dirname, latest_per_key
 
-
-def _contains_map_type(dt: DataType) -> bool:
-    """True if ``dt`` is or nests a MapType (struct fields, array elements,
-    map keys/values) — Spark's hash expressions reject MapType at any
-    depth, so the deterministic tie-break hash must skip such columns."""
-    if isinstance(dt, MapType):
-        return True
-    if isinstance(dt, ArrayType):
-        return _contains_map_type(dt.elementType)
-    if isinstance(dt, StructType):
-        return any(_contains_map_type(f.dataType) for f in dt.fields)
-    return False
-
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _LOG_DIR = "_txnlog"
 _DATA_DIR = "data"
 _MAX_COMMIT_RETRIES = 20
@@ -507,7 +485,8 @@ class TxnTable:
                         r[0] for r in hit.distinct().collect()
                     ]
                     affected = {
-                        self._partition_dirname(v) for v in affected_vals
+                        _partition_dirname(self.partition_col, v)
+                        for v in affected_vals
                     }
                     non_null = [v for v in affected_vals if v is not None]
                     cond = (
@@ -553,7 +532,7 @@ class TxnTable:
                         f.name
                         for f in combined.schema.fields
                         if f.name != "_src"
-                        and not _contains_map_type(f.dataType)
+                        and not _contains_map(f.dataType)
                     ]
                     tie = (
                         [F.desc(F.xxhash64(*[F.col(c) for c in hashable]))]
@@ -615,12 +594,6 @@ class TxnTable:
         raise TxnConflictError(
             f"gave up after {_MAX_COMMIT_RETRIES} contended commits on "
             f"{self.path!r} (merge)"
-        )
-
-    def _partition_dirname(self, value) -> str:
-        return (
-            f"{self.partition_col}="
-            f"{_HIVE_NULL if value is None else value.isoformat()}"
         )
 
     # ---- reading -----------------------------------------------------------
@@ -694,7 +667,9 @@ class TxnTable:
         manifest = self._manifest(v)
         live = self._live_map(manifest)
         if partitions is not None and "" not in live:
-            wanted = {self._partition_dirname(p) for p in partitions}
+            wanted = {
+                _partition_dirname(self.partition_col, p) for p in partitions
+            }
             live = {p: d for p, d in live.items() if p in wanted}
         if not live:
             return self._empty_frame(manifest, v)
@@ -725,7 +700,9 @@ class TxnTable:
         wanted = (
             None
             if partitions is None
-            else {self._partition_dirname(p) for p in partitions}
+            else {
+                _partition_dirname(self.partition_col, p) for p in partitions
+            }
         )
         for _ in range(_MAX_COMMIT_RETRIES):
             read_version = self.current_version()

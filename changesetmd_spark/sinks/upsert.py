@@ -1,4 +1,5 @@
-"""Idempotent upsert sink (SURVEY.md §2.1 S5-S6, §2.9 T4-T5).
+"""Idempotent upsert sink for the changeset store (SURVEY.md §2.1 S5-S6,
+§2.9 T4-T5).
 
 The reference achieves replay-safe replication by delete-then-insert per
 changeset id inside one transaction (ref changesetmd.py:71-76,105-106;
@@ -16,25 +17,30 @@ untouched, byte for byte.  This is the reference's true incremental semantics
 diff against a 100 TB store rewrites a handful of day-partitions, not the
 table.
 
+``ChangesetStore`` is the only table on this sink.  Every other MERGE
+(the streaming replication table, the continuous-aggregate rollup) commits
+through :mod:`.txn_table`, which reuses this module's ``latest_per_key``
+kernel and partition helpers.
+
 Scale notes (100 TB):
   * the anti-join broadcasts only the *batch key set* (a minutely diff is
     thousands of ids — tiny), so current data is never shuffled;
   * locating the partitions that hold batch keys is a column-pruned scan of
-    ``(key, partition_col)`` only — parquet reads two narrow columns;
+    ``(id, created_date)`` only — parquet reads two narrow columns;
   * the rewrite reads back just the affected partitions (partition-pruned
     scan) and swaps exactly those partition directories.
 
 Crash safety: all scratch state (staging writes AND pre-swap backups) lives
 in *sibling* directories of the target (``{target}.staging-*``,
-``{target}.bak-*``, ``{target}.old-*``) — never inside it, so Spark
-partition discovery on a replay can never parse leftover scratch as data.
-``upsert_parquet`` starts by recovering from any interrupted predecessor:
-a partition (or the whole table) that was moved out to a backup but whose
-replacement never landed is renamed back, then every remaining scratch
-sibling is swept.  After recovery the table holds either the pre-batch or
-the post-batch rows for each partition — and the store's watermark is
-unadvanced, so the batch replays, which the idempotent MERGE absorbs (T4;
-the same contract as the reference's replayable diffs, ref README.md:59).
+``{target}.bak-*``) — never inside it, so Spark partition discovery on a
+replay can never parse leftover scratch as data.  ``upsert_parquet`` starts
+by recovering from any interrupted predecessor: a partition that was moved
+out to a backup but whose replacement never landed is renamed back, then
+every remaining scratch sibling is swept.  After recovery the table holds
+either the pre-batch or the post-batch rows for each partition — and the
+store's watermark is unadvanced, so the batch replays, which the idempotent
+MERGE absorbs (T4; the same contract as the reference's replayable diffs,
+ref README.md:59).
 
 Concurrency: the reference takes an exclusive NOWAIT lock on the state
 table and bails if another run is live (ref changesetmd.py:140-143,
@@ -45,11 +51,7 @@ by a *crashed* process (recorded pid no longer alive) is stolen, matching
 the reference's session-scoped lock that dies with its holder.  Single-host
 semantics by design — the cluster-visible multi-writer path is
 :mod:`.txn_table` (commit-log table format, Delta-style optimistic
-concurrency), which reuses this module's ``latest_per_key`` MERGE kernel.
-
-Tables without a timestamp to partition on (``partition_source=None``) fall
-back to a whole-table rewrite with an atomic directory swap — correct for
-small stores like the streaming rollup table, never for the changeset table.
+concurrency).
 """
 
 from __future__ import annotations
@@ -60,6 +62,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 PARTITION_COL = "created_date"
 PARTITION_SOURCE = "created_at"
@@ -129,30 +132,21 @@ def _scratch_siblings(target_dir: str) -> list[str]:
         return []
     out = []
     for d in os.listdir(parent):
-        for marker in (".staging-", ".bak-", ".old-"):
+        for marker in (".staging-", ".bak-"):
             if d.startswith(base + marker):
                 out.append(os.path.join(parent, d))
                 break
     return sorted(out)
 
 
-def _recover_and_sweep(target_dir: str, partition_col: str) -> None:
+def _recover_and_sweep(target_dir: str) -> None:
     """Undo any interrupted predecessor's swap, then remove its scratch.
 
-    Invariants restored: every partition (and the table root) exists exactly
-    once under its canonical name; no ``.staging-* / .bak-* / .old-*``
-    scratch survives, either as a sibling of the target or (legacy layout)
-    inside it."""
+    Invariants restored: every partition exists exactly once under its
+    canonical name; no ``.staging-* / .bak-*`` sibling of the target
+    survives."""
     target_dir = os.path.abspath(target_dir)
     scratch = _scratch_siblings(target_dir)
-
-    # Whole-dir swap crashed between rename(target→old) and
-    # rename(staging→target): the newest .old- backup IS the table.
-    if not os.path.exists(target_dir):
-        olds = [d for d in scratch if f"{os.path.basename(target_dir)}.old-" in os.path.basename(d)]
-        if olds:
-            os.rename(olds[-1], target_dir)
-            scratch = [d for d in scratch if d != olds[-1]]
 
     # Partition swap crashed mid-loop: restore any partition that was moved
     # out to a .bak- root but whose replacement never landed.
@@ -164,20 +158,6 @@ def _recover_and_sweep(target_dir: str, partition_col: str) -> None:
                 dst = os.path.join(target_dir, name)
                 if not os.path.exists(dst):
                     os.rename(os.path.join(d, name), dst)
-
-        # Legacy (pre-round-3) layout staged backups INSIDE target_dir as
-        # '<partition>.old-<uuid>'; restore if the partition is gone, else drop.
-        for name in os.listdir(target_dir):
-            if ".old-" not in name:
-                continue
-            path = os.path.join(target_dir, name)
-            canonical = os.path.join(target_dir, name.split(".old-")[0])
-            if not os.path.exists(canonical):
-                os.rename(path, canonical)
-            elif os.path.isdir(path):
-                shutil.rmtree(path)
-            else:
-                os.unlink(path)
 
     for d in scratch:
         if os.path.isdir(d):
@@ -209,7 +189,7 @@ def latest_per_key(
         order.append(F.col("num_changes").desc_nulls_last())
     hashable = [
         f.name for f in df.schema.fields if not _contains_map(f.dataType)
-    ]  # Spark prohibits hash functions over MAP (unordered ⇒ unstable hash)
+    ]
     if hashable:
         order.append(F.xxhash64(*[F.col(c) for c in hashable]).desc())
     w = Window.partitionBy(*keys).orderBy(*order)
@@ -220,113 +200,61 @@ def latest_per_key(
     )
 
 
-def _contains_map(dt) -> bool:
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.MapType):
+def _contains_map(dt: DataType) -> bool:
+    """True if ``dt`` is or nests a MapType (struct fields, array elements)
+    — Spark's hash expressions reject MapType at any depth (unordered ⇒
+    unstable hash), so a deterministic tie-break hash must skip such
+    columns."""
+    if isinstance(dt, MapType):
         return True
-    if isinstance(dt, T.ArrayType):
+    if isinstance(dt, ArrayType):
         return _contains_map(dt.elementType)
-    if isinstance(dt, T.StructType):
+    if isinstance(dt, StructType):
         return any(_contains_map(f.dataType) for f in dt.fields)
     return False
-
-
-def _partition_dirs(target_dir: str, partition_col: str) -> list[str]:
-    return [
-        d
-        for d in os.listdir(target_dir)
-        if d.startswith(f"{partition_col}=")
-        and os.path.isdir(os.path.join(target_dir, d))
-    ]
 
 
 def _partition_dirname(partition_col: str, value) -> str:
     return f"{partition_col}={_HIVE_NULL if value is None else value.isoformat()}"
 
 
-def _write_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
+def _write_partitioned(df: DataFrame, path: str) -> None:
     (
-        df.sortWithinPartitions(partition_col)
+        df.sortWithinPartitions(PARTITION_COL)
         .write.mode("overwrite")
-        .partitionBy(partition_col)
+        .partitionBy(PARTITION_COL)
         .parquet(path)
     )
 
 
-def _swap_dirs(target_dir: str, staging: str) -> None:
-    backup = f"{target_dir}.old-{uuid.uuid4().hex}"
-    if os.path.exists(target_dir):
-        os.rename(target_dir, backup)
-        os.rename(staging, target_dir)
-        shutil.rmtree(backup)
-    else:
-        os.rename(staging, target_dir)
+def upsert_parquet(spark: SparkSession, target_dir: str, batch: DataFrame) -> None:
+    """MERGE the changeset ``batch`` into the store table at ``target_dir``:
+    batch rows replace current rows with the same ``id`` (delete+insert
+    parity, S6), applied idempotently — replaying the identical batch yields
+    an identical table (T4; proven by the replay test).
 
-
-def upsert_parquet(
-    spark: SparkSession,
-    target_dir: str,
-    batch: DataFrame,
-    key: str | list[str] = "id",
-    order_col: str = "sequence",
-    partition_source: str | None = PARTITION_SOURCE,
-    partition_col: str = PARTITION_COL,
-) -> None:
-    """MERGE ``batch`` into the parquet table at ``target_dir``: batch rows
-    replace current rows with the same key (delete+insert parity, S6),
-    applied idempotently — replaying the identical batch yields an identical
-    table (T4; proven by the replay test).
-
-    With a ``partition_source`` timestamp column present, the table is kept
-    hive-partitioned on ``date(partition_source)`` and the MERGE rewrites
-    only the partitions containing batch keys; files of untouched partitions
-    are not rewritten.
+    The table is hive-partitioned on ``created_date = date(created_at)``
+    and the MERGE rewrites only the partitions containing batch keys; files
+    of untouched partitions are not rewritten.
     """
     lock = _acquire_lock(target_dir)
     try:
-        _recover_and_sweep(target_dir, partition_col)
-        _upsert_parquet_locked(
-            spark, target_dir, batch, key, order_col, partition_source, partition_col
-        )
+        _recover_and_sweep(target_dir)
+        _upsert_parquet_locked(spark, target_dir, batch)
     finally:
         _release_lock(lock)
 
 
 def _upsert_parquet_locked(
-    spark: SparkSession,
-    target_dir: str,
-    batch: DataFrame,
-    key: str | list[str],
-    order_col: str,
-    partition_source: str | None,
-    partition_col: str,
+    spark: SparkSession, target_dir: str, batch: DataFrame
 ) -> None:
-    key_cols = [key] if isinstance(key, str) else list(key)
-    incoming = latest_per_key(batch, key=key_cols, order_col=order_col)
-
-    partitioned = partition_source is not None and partition_source in batch.columns
-    if not partitioned:
-        _upsert_full_rewrite(spark, target_dir, incoming, key_cols)
-        return
-    if partition_col not in incoming.columns:
-        incoming = incoming.withColumn(partition_col, F.to_date(partition_source))
+    key_cols = ["id"]
+    incoming = latest_per_key(batch)
+    if PARTITION_COL not in incoming.columns:
+        incoming = incoming.withColumn(PARTITION_COL, F.to_date(PARTITION_SOURCE))
 
     if not os.path.exists(target_dir):
-        _write_partitioned(incoming, target_dir, partition_col)
-        return
-
-    if not _partition_dirs(target_dir, partition_col):
-        # Unpartitioned legacy layout: one-time migration into the canonical
-        # date-partitioned layout via full rewrite.
-        current = spark.read.parquet(target_dir)
-        if partition_col not in current.columns:
-            current = current.withColumn(partition_col, F.to_date(partition_source))
-        keys = incoming.select(*key_cols).distinct()
-        kept = current.join(F.broadcast(keys), on=key_cols, how="left_anti")
-        staging = f"{target_dir}.staging-{uuid.uuid4().hex}"
-        _write_partitioned(kept.unionByName(incoming), staging, partition_col)
-        _swap_dirs(target_dir, staging)
+        _write_partitioned(incoming, target_dir)
         return
 
     keys = incoming.select(*key_cols).distinct()
@@ -338,21 +266,21 @@ def _upsert_parquet_locked(
     # a changeset in practice, so the two sets normally coincide; computing
     # both keeps a key whose date DID change from leaving a stale row behind.
     hit = (
-        current.select(*key_cols, partition_col)
+        current.select(*key_cols, PARTITION_COL)
         .join(F.broadcast(keys), on=key_cols, how="left_semi")
-        .select(partition_col)
+        .select(PARTITION_COL)
     )
     affected = [
         r[0]
-        for r in hit.union(incoming.select(partition_col)).distinct().collect()
+        for r in hit.union(incoming.select(PARTITION_COL)).distinct().collect()
     ]
     if not affected:
         return
 
     non_null = [d for d in affected if d is not None]
-    cond = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
+    cond = F.col(PARTITION_COL).isin(non_null) if non_null else F.lit(False)
     if any(d is None for d in affected):
-        cond = cond | F.col(partition_col).isNull()
+        cond = cond | F.col(PARTITION_COL).isNull()
 
     kept = current.filter(cond).join(
         F.broadcast(keys), on=key_cols, how="left_anti"
@@ -360,7 +288,7 @@ def _upsert_parquet_locked(
     new_state = kept.unionByName(incoming.select(*kept.columns))
 
     staging = f"{target_dir}.staging-{uuid.uuid4().hex}"
-    _write_partitioned(new_state, staging, partition_col)
+    _write_partitioned(new_state, staging)
 
     # Swap exactly the affected partition directories; an affected partition
     # absent from staging lost all its rows (key moved dates) and is removed.
@@ -371,7 +299,7 @@ def _upsert_parquet_locked(
     bak_root = f"{target_dir}.bak-{uuid.uuid4().hex}"
     os.makedirs(bak_root)
     for value in affected:
-        name = _partition_dirname(partition_col, value)
+        name = _partition_dirname(PARTITION_COL, value)
         old = os.path.join(target_dir, name)
         new = os.path.join(staging, name)
         if os.path.exists(old):
@@ -380,24 +308,3 @@ def _upsert_parquet_locked(
             os.rename(new, os.path.join(target_dir, name))
     shutil.rmtree(bak_root)
     shutil.rmtree(staging)
-
-
-def _upsert_full_rewrite(
-    spark: SparkSession,
-    target_dir: str,
-    incoming: DataFrame,
-    key_cols: list[str],
-) -> None:
-    """Whole-table MERGE for unpartitionable (small) tables: anti-join keeps
-    + union + atomic directory swap — the round-1 shape, acceptable only
-    where the table is batch-sized (e.g. the continuous-aggregate rollup)."""
-    if os.path.exists(target_dir):
-        current = spark.read.parquet(target_dir)
-        keys = incoming.select(*key_cols).distinct()
-        kept = current.join(F.broadcast(keys), on=key_cols, how="left_anti")
-        new_state = kept.unionByName(incoming)
-    else:
-        new_state = incoming
-    staging = f"{target_dir}.staging-{uuid.uuid4().hex}"
-    new_state.write.mode("overwrite").parquet(staging)
-    _swap_dirs(target_dir, staging)

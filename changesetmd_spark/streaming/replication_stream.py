@@ -4,7 +4,8 @@ The Structured-Streaming shape of the reference's catch-up loop
 (ref changesetmd.py:137-195): replication diff files land in a directory
 (the production fetcher drops them there; tests write fixtures), a file
 stream source parses them incrementally, and ``foreachBatch`` applies each
-micro-batch as an idempotent last-write-wins MERGE.
+micro-batch as an idempotent last-write-wins MERGE commit on the
+transactional table format (:mod:`..sinks.txn_table`).
 
 Exactly-once story (T2-T4): the streaming checkpoint records which files
 were consumed (replacing the osm_changeset_state watermark row,
@@ -19,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sinks.upsert import upsert_parquet
+from ..sinks.txn_table import TxnTable
 from ..sources.schema import CHANGESET_XML_READ_SCHEMA
 from ..sources.xml_source import normalize_changesets
 
@@ -62,45 +63,26 @@ def run_replication_stream(
     table_dir: str,
     checkpoint_dir: str,
     await_termination: bool = True,
-):
-    """Consume every currently-available diff (availableNow) and MERGE it
-    into the changeset table.  Re-running with the same checkpoint consumes
-    only files that arrived since — the incremental catch-up loop T1."""
-    diffs = stream_changeset_diffs(spark, src_dir)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        normalized = normalize_changesets(batch_df, extra=("sequence",))
-        upsert_parquet(spark, table_dir, normalized)
-
-    q = (
-        diffs.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q.awaitTermination()
-    return q
-
-
-def run_replication_stream_txn(
-    spark: SparkSession,
-    src_dir: str,
-    table_dir: str,
-    checkpoint_dir: str,
-    await_termination: bool = True,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
     order_aware: bool = False,
 ):
-    """The cluster-deployment variant of :func:`run_replication_stream`:
-    each micro-batch MERGEs through :class:`~..sinks.txn_table.TxnTable`
-    instead of the directory-swap sink, so commits are atomic manifests
-    other writers (and concurrent snapshot readers) can see — the full
-    parity stack for the reference's transactional replication
-    (ref changesetmd.py:140-143,71-76): streaming checkpoint = consumed-file
-    watermark, commit log = transaction boundary, LWW MERGE = idempotent
-    delete+insert.
+    """Consume every currently-available diff (availableNow) and MERGE it
+    into the changeset table at ``table_dir``.  Re-running with the same
+    checkpoint consumes only files that arrived since — the incremental
+    catch-up loop T1.
+
+    Each micro-batch MERGEs through :class:`~..sinks.txn_table.TxnTable`,
+    so commits are atomic manifests other writers (and concurrent snapshot
+    readers) can see — the full parity stack for the reference's
+    transactional replication (ref changesetmd.py:140-143,71-76):
+    streaming checkpoint = consumed-file watermark, commit log =
+    transaction boundary, LWW MERGE = idempotent delete+insert.  Read the
+    table back with ``TxnTable(spark, table_dir).read()``.  The normalized
+    micro-batch is persisted around the MERGE, whose eager actions would
+    otherwise re-parse the diff XML once per action.  Once an awaited query
+    terminates, ``TxnTable.vacuum()`` (default retention) reclaims the
+    commit directories the stream superseded.
 
     ``compact_every``: run transactional bin-pack compaction after every N
     micro-batches — long-run maintenance interleaved with ingest, the
@@ -110,24 +92,25 @@ def run_replication_stream_txn(
     ``order_aware=True`` switches the MERGE to max-sequence-wins across
     current ∪ incoming (see :meth:`TxnTable.merge`): the stream then
     converges to the in-order state under ANY file delivery order, making
-    the mtime in-order contract (module docstring) unnecessary — the
-    deployment-grade default when the diff fetcher isn't the only writer
-    or backfills can interleave with the tail."""
-    from ..sinks.txn_table import TxnTable
-
+    the mtime in-order contract (see :func:`stream_changeset_diffs`)
+    unnecessary — the deployment-grade default when the diff fetcher isn't
+    the only writer or backfills can interleave with the tail."""
     diffs = stream_changeset_diffs(
         spark, src_dir, max_files_per_trigger=max_files_per_trigger
     )
     table = TxnTable(spark, table_dir, partition_source="created_at")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        normalized = normalize_changesets(batch_df, extra=("sequence",))
-        table.merge(
-            normalized,
-            key="id",
-            order_col="sequence",
-            order_aware=order_aware,
-        )
+        normalized = normalize_changesets(batch_df, extra=("sequence",)).persist()
+        try:
+            table.merge(
+                normalized,
+                key="id",
+                order_col="sequence",
+                order_aware=order_aware,
+            )
+        finally:
+            normalized.unpersist()
         if compact_every and (batch_id + 1) % compact_every == 0:
             table.compact()
 
@@ -139,4 +122,5 @@ def run_replication_stream_txn(
     )
     if await_termination:
         q.awaitTermination()
+        table.vacuum()
     return q

@@ -4,10 +4,11 @@ time-bucketed aggregate table over a stream.
 TimescaleDB-style continuous aggregates, Spark-first: the stream runs an
 update-mode windowed aggregation (watermark bounds the state store); every
 micro-batch emits the CURRENT totals for each window it touched, and
-``foreachBatch`` MERGEs those rows into a parquet rollup table keyed by
-(window_start, group key).  Late rows inside the watermark update their
-window's totals on the next batch; replay converges because the MERGE is
-last-write-wins by batch id (same mechanism as the replication sink, T4).
+``foreachBatch`` MERGEs those rows into a transactional rollup table
+(:class:`~..sinks.txn_table.TxnTable`) keyed by (window_start, group key).
+Late rows inside the watermark update their window's totals on the next
+batch; replay converges because the MERGE is last-write-wins by batch id
+(same mechanism as the replication stream, T4).
 
 Scale notes: the rollup table is tiny relative to the stream (one row per
 bucket×key), so the MERGE's broadcast-anti-join never shuffles history;
@@ -23,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sinks.upsert import upsert_parquet
+from ..sinks.txn_table import TxnTable
 
 
 def hourly_event_rollup(events: DataFrame) -> DataFrame:
@@ -54,19 +55,27 @@ def run_hourly_rollup(
     shuffle_partitions: int | None = None,
 ) -> None:
     """Maintain the rollup table incrementally: one availableNow pass over
-    whatever new data the checkpoint hasn't seen, MERGE into ``rollup_dir``.
+    whatever new data the checkpoint hasn't seen, MERGE into ``rollup_dir``
+    (read it back with ``TxnTable(spark, rollup_dir).read()``), then
+    ``TxnTable.vacuum()`` the commit directories it superseded.
 
     ``shuffle_partitions`` pins the stateful width for this maintenance run
     (see events_stream.state_width — frozen into the checkpoint, so it must
     be chosen at first start, not left to the session default)."""
 
+    table = TxnTable(spark, rollup_dir)
+
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_parquet(
-            spark,
-            rollup_dir,
-            batch_df.withColumn("sequence", F.lit(batch_id).cast("long")),
-            key=["bucket_start", "event_type"],
-        )
+        # every action on a foreachBatch frame re-runs the stateful
+        # aggregation (the reported state rows then count it once per
+        # MERGE action); persisted, it runs once per micro-batch
+        batch = batch_df.withColumn(
+            "sequence", F.lit(batch_id).cast("long")
+        ).persist()
+        try:
+            table.merge(batch, key=["bucket_start", "event_type"])
+        finally:
+            batch.unpersist()
 
     from .events_stream import _scoped_conf
 
@@ -83,6 +92,7 @@ def run_hourly_rollup(
             .start()
         )
         q.awaitTermination()
+    table.vacuum()
     # mirror run_stream_to_table's state telemetry for the scale smoke
     from . import events_stream as _es
 
@@ -130,7 +140,7 @@ def q_stream_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(base, "checkpoint"),
             shuffle_partitions=state_width(spark, sf_dir),
         )
-        roll = spark.read.parquet(rollup_dir).select(
+        roll = TxnTable(spark, rollup_dir).read().select(
             F.date_format("bucket_start", _TS).alias("bucket_start_s"),
             "event_type",
             "n_events",

@@ -323,3 +323,47 @@ def test_bitext_ivf_numpy_arm_equivalence(spark, sf_dir, monkeypatch):
         oracles()["q_bitext_margin_mining_ivf"],
         sf_dir,
     )
+
+
+def test_bitext_numpy_route_rejects_ragged_vectors():
+    """The numpy routing arm reshapes a batch's flattened vectors into
+    (rows, dim); a short, long or NULL vector must raise instead of
+    shifting every later row's values into the wrong slots.  Pure
+    pyarrow/numpy — no Spark job."""
+    import numpy as np
+    import pyarrow as pa
+    import pytest
+
+    from changesetmd_spark.operators.bitext import _np_route_factory
+
+    cc = np.zeros((2, 3))
+    cc[1] = 1.0
+    route = _np_route_factory(
+        cc,
+        seed_cells=np.array([10, 11]),
+        SE=cc.copy(),
+        seed_start=np.array([0, 1]),
+        seed_cnt=np.array([1, 1]),
+        probe=1,
+        keep=1,
+        id_name="x_id",
+    )
+
+    def batch(vectors):
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(range(len(vectors)), pa.int64()),
+                pa.array(vectors, pa.list_(pa.float64())),
+            ],
+            names=["x_id", "e"],
+        )
+
+    ok = list(route(iter([batch([[0.0, 0.0, 0.1], [1.0, 0.9, 1.0]])])))
+    assert ok[0].column(1).to_pylist() == [10, 11]
+    for bad in (
+        [[0.0, 0.0], [1.0, 1.0, 1.0]],
+        [[0.0, 0.0], [1.0, 1.0, 1.0, 1.0]],  # total 6 = 2 x 3, still ragged
+        [[0.0, 0.0, 0.0], None],
+    ):
+        with pytest.raises(ValueError, match="expected 3"):
+            list(route(iter([batch(bad)])))

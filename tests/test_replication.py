@@ -303,46 +303,6 @@ def test_recovery_restores_partition_moved_to_backup(spark, tmp_path):
     assert not os.path.exists(target + ".staging-deadbeef")
 
 
-def test_recovery_restores_whole_table_from_old_sibling(spark, tmp_path):
-    """Crash window in the whole-dir swap: target renamed away, staging never
-    moved in.  The next upsert must rename the .old- backup back instead of
-    treating the table as empty (which would silently drop all history)."""
-    import os
-
-    from changesetmd_spark.sinks import upsert_parquet
-
-    target = str(tmp_path / "tbl")
-    upsert_parquet(spark, target, _mini_batch(spark, [1, 2]))
-    os.rename(target, target + ".old-deadbeef")
-
-    upsert_parquet(spark, target, _mini_batch(spark, [3], seq=101))
-    assert [i for i, _, _ in _table_rows(spark, target)] == [1, 2, 3]
-    assert not os.path.exists(target + ".old-deadbeef")
-
-
-def test_recovery_sweeps_legacy_backup_inside_target(spark, tmp_path):
-    """Pre-round-3 layout staged '<partition>.old-<uuid>' INSIDE target_dir;
-    leftovers must be restored (partition missing) or dropped (present), so
-    partition discovery never parses them as data."""
-    import os
-
-    from changesetmd_spark.sinks import upsert_parquet
-
-    target = str(tmp_path / "tbl")
-    upsert_parquet(spark, target, _mini_batch(spark, [1], day=1))
-    upsert_parquet(spark, target, _mini_batch(spark, [10], day=2))
-
-    p1 = os.path.join(target, "created_date=2024-05-01")
-    p2 = os.path.join(target, "created_date=2024-05-02")
-    os.rename(p2, p2 + ".old-feedface")          # partition missing → restore
-    os.makedirs(p1 + ".old-feedface")            # partition present → drop
-
-    upsert_parquet(spark, target, _mini_batch(spark, [2], seq=101, day=1))
-    rows = _table_rows(spark, target)
-    assert rows == [(1, 100, "v100"), (2, 101, "v101"), (10, 100, "v100")]
-    assert not any(".old-" in d for d in os.listdir(target))
-
-
 def test_replication_over_http_fixture_server(spark, tmp_path):
     """S3/S4 end-to-end through a REAL HTTP hop: a stdlib http.server serves
     state.yaml plus three .osm.gz diffs in the production NNN/NNN/NNN layout;

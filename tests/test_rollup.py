@@ -8,6 +8,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
+from changesetmd_spark.sinks.txn_table import TxnTable
 from changesetmd_spark.streaming.rollup import run_hourly_rollup
 
 
@@ -32,7 +33,7 @@ def _batch_rollup(df):
 def _stored(spark, rollup_dir):
     return {
         (r.bucket_start, r.event_type): (r.n_events, r.sum_value)
-        for r in spark.read.parquet(rollup_dir).collect()
+        for r in TxnTable(spark, rollup_dir).read().collect()
     }
 
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 import gzip
 import os
 
+from changesetmd_spark.sinks.txn_table import TxnTable
 from changesetmd_spark.streaming import run_replication_stream
 from tests.test_replication import _cs, _diff_xml
 
@@ -30,7 +31,7 @@ def _write_diff(src_dir: str, seq: int, changesets: list[str]) -> None:
 def _rows(spark, table_dir):
     return sorted(
         (r.id, r.open, r.num_changes, r.sequence)
-        for r in spark.read.parquet(table_dir).collect()
+        for r in TxnTable(spark, table_dir).read().collect()
     )
 
 
@@ -90,16 +91,13 @@ def test_streaming_replication_txn_sink(spark, tmp_path):
     """The foreachBatch → TxnTable path: every micro-batch is one atomic
     commit; incremental consumption, idempotent replay, and version history
     all hold through the commit log."""
-    from changesetmd_spark.sinks.txn_table import TxnTable
-    from changesetmd_spark.streaming import run_replication_stream_txn
-
     src = str(tmp_path / "diffs")
     table_dir = str(tmp_path / "store" / "changesets_txn")
     ckpt = str(tmp_path / "ckpt")
 
     _write_diff(src, 101, [_cs(7, True, 1), _cs(8, False, 2)])
     _write_diff(src, 102, [_cs(7, False, 5)])
-    run_replication_stream_txn(spark, src, table_dir, ckpt)
+    run_replication_stream(spark, src, table_dir, ckpt)
     table = TxnTable(spark, table_dir, partition_source="created_at")
     v_after_first = table.current_version()
 
@@ -114,13 +112,13 @@ def test_streaming_replication_txn_sink(spark, tmp_path):
     # same checkpoint + one new diff: exactly the new file is consumed and
     # lands as one more commit
     _write_diff(src, 103, [_cs(9, False, 3)])
-    run_replication_stream_txn(spark, src, table_dir, ckpt)
+    run_replication_stream(spark, src, table_dir, ckpt)
     assert rows() == [(7, False, 5, 102), (8, False, 2, 101), (9, False, 3, 103)]
     assert table.current_version() == v_after_first + 1
 
     # lost checkpoint → full replay → same table state (T4 through the
     # commit log); history shows the replay commits without corrupting state
-    run_replication_stream_txn(spark, src, table_dir, str(tmp_path / "ckpt2"))
+    run_replication_stream(spark, src, table_dir, str(tmp_path / "ckpt2"))
     assert rows() == [(7, False, 5, 102), (8, False, 2, 101), (9, False, 3, 103)]
 
 
@@ -148,9 +146,6 @@ def test_streaming_replication_steady_state_batches(spark, tmp_path):
     interleaves the transactional OPTIMIZE pass with ingest without
     corrupting state, and the post-run full compact + vacuum collapse the
     commit-history backlog to one live data dir with rows intact."""
-    from changesetmd_spark.sinks.txn_table import TxnTable
-    from changesetmd_spark.streaming import run_replication_stream_txn
-
     src = str(tmp_path / "diffs")
     table_dir = str(tmp_path / "store" / "cs_txn")
     ckpt = str(tmp_path / "ckpt")
@@ -162,7 +157,7 @@ def test_streaming_replication_steady_state_batches(spark, tmp_path):
             seq,
             [_cs(seq - 100, False, seq - 100), _cs(seq - 99, True, 1)],
         )
-    run_replication_stream_txn(
+    run_replication_stream(
         spark, src, table_dir, ckpt,
         max_files_per_trigger=3, compact_every=2,
     )
@@ -185,7 +180,7 @@ def test_streaming_replication_steady_state_batches(spark, tmp_path):
 
     # incremental: same checkpoint, one late diff -> exactly one more commit
     _write_diff(src, 110, [_cs(10, False, 7)])
-    run_replication_stream_txn(
+    run_replication_stream(
         spark, src, table_dir, ckpt, max_files_per_trigger=3
     )
     assert [m["op"] for m in table.history()].count("merge") == 4
@@ -212,9 +207,6 @@ def test_streaming_replication_order_aware_shuffled_delivery(spark, tmp_path):
     """order_aware=True removes the in-order mtime contract: diffs delivered
     in REVERSE order (newest file oldest mtime, so the file source batches
     them backwards) still converge to the in-order final state."""
-    from changesetmd_spark.sinks.txn_table import TxnTable
-    from changesetmd_spark.streaming import run_replication_stream_txn
-
     src = str(tmp_path / "diffs")
     table_dir = str(tmp_path / "store" / "cs_txn")
     ckpt = str(tmp_path / "ckpt")
@@ -226,7 +218,7 @@ def test_streaming_replication_order_aware_shuffled_delivery(spark, tmp_path):
         t = 1_700_000_000 - seq  # REVERSED
         path = os.path.join(src, f"{seq:09d}.osm.gz")
         os.utime(path, (t, t))
-    run_replication_stream_txn(
+    run_replication_stream(
         spark, src, table_dir, ckpt,
         max_files_per_trigger=1, order_aware=True,
     )

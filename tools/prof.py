@@ -1,11 +1,14 @@
 #!/usr/bin/env python3
-"""Round-17 optimization profiler: per-query build/collect timing split,
-Spark job count, and a formatted-explain dump for plans/r17/.
+"""Optimization profiler: per-query build/collect timing split, Spark job
+count, and a formatted-explain dump for plans/r<ROUND>/.
 
-    PYTHONPATH=. python tools/prof17.py q_a q_b ...           # profile
-    PYTHONPATH=. python tools/prof17.py --plans before q_a    # dump plans
-    PYTHONPATH=. python tools/prof17.py --top N               # N slowest
+    PYTHONPATH=. python tools/prof.py ROUND q_a q_b ...           # profile
+    PYTHONPATH=. python tools/prof.py ROUND --plans before q_a    # dump plans
+    PYTHONPATH=. python tools/prof.py ROUND --top N               # N slowest
       from BENCH_full.json
+
+``ROUND`` (e.g. ``18`` or ``r18``) names the plan directory and the Spark
+app (``prof18``).
 
 Timing split matters because many builders do driver-side work (streaming
 runs, txn commits, counts, eager checkpoints) in the BUILD phase; the bench
@@ -20,14 +23,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from changesetmd_spark import get_spark, registry  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PLANS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r17"
-)
 
 
 def explain_str(df) -> str:
@@ -37,27 +38,25 @@ def explain_str(df) -> str:
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd = sys.argv[1].lstrip("r")
+    plans_dir = os.path.join(REPO, "plans", f"r{rnd}")
+    args = sys.argv[2:]
     plans_tag = None
     if args and args[0] == "--plans":
         plans_tag = args[1]
         args = args[2:]
     if args and args[0] == "--top":
         n = int(args[1])
-        bf = json.load(
-            open(
-                os.path.join(
-                    os.path.dirname(PLANS_DIR), "..", "BENCH_full.json"
-                )
-            )
-        )
+        bf = json.load(open(os.path.join(REPO, "BENCH_full.json")))
         args = [
             k
             for k, _ in sorted(
                 bf["queries_median"].items(), key=lambda kv: -kv[1]
             )[:n]
         ]
-    spark = get_spark(app_name="prof17")
+    spark = get_spark(app_name=f"prof{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
     # warmup (mirrors bench.py)
@@ -84,9 +83,9 @@ def main() -> None:
         spark.catalog.clearCache()
         j1 = len(st.getJobIdsForGroup(None) or [])
         if plans_tag:
-            os.makedirs(PLANS_DIR, exist_ok=True)
+            os.makedirs(plans_dir, exist_ok=True)
             with open(
-                os.path.join(PLANS_DIR, f"{name}_{plans_tag}.txt"), "w"
+                os.path.join(plans_dir, f"{name}_{plans_tag}.txt"), "w"
             ) as f:
                 f.write(explain_str(df2))
         rows_out[name] = {

@@ -360,10 +360,9 @@ def replication_steady_state(spark) -> dict:
     """Steady-state replication latency (VERDICT r7 #8): a backlog of
     ``SPARK_GRAFT_REPL_DIFFS`` minutely diff files (default 400; set 10000
     for the full long-run sweep) drains through
-    ``run_replication_stream`` as bounded micro-batches (25 diffs each)
-    with transactional compaction every 4 batches — the production loop:
-    streaming checkpoint = consumed-file watermark, one atomic MERGE commit
-    per batch, OPTIMIZE interleaved with ingest.
+    ``run_replication_stream`` as bounded micro-batches (25 diffs each) —
+    the production loop: streaming checkpoint = consumed-file watermark,
+    one atomic MERGE commit per batch.
 
     Two phases over ONE checkpoint: phase 1 (half the diffs) warms the
     table so phase 2 measures MERGE-against-a-populated-table — the
@@ -422,27 +421,25 @@ def replication_steady_state(spark) -> dict:
         for s in range(1, half + 1):
             write_diff(s)
         run_replication_stream(
-            spark, src, table_dir, ckpt,
-            max_files_per_trigger=25, compact_every=4,
+            spark, src, table_dir, ckpt, max_files_per_trigger=25
         )
         for s in range(half + 1, n_diffs + 1):
             write_diff(s)
         t0 = time.perf_counter()
         run_replication_stream(
-            spark, src, table_dir, ckpt,
-            max_files_per_trigger=25, compact_every=4,
+            spark, src, table_dir, ckpt, max_files_per_trigger=25
         )
         dt = time.perf_counter() - t0
 
         table = TxnTable(spark, table_dir, partition_source="created_at")
         rows = table.read().count()
         versions = table.current_version()
-        # min_dirs=1 = the full OPTIMIZE pass: commit dirs are shared by
-        # several date partitions, so superseded rows keep whole dirs
-        # referenced (live via a sibling partition) — rewriting every
-        # partition into one fresh dir un-references all of them, and
-        # vacuum then reclaims the long run's entire dir backlog.
-        table.compact(min_dirs=1)
+        # the full OPTIMIZE pass: commit dirs are shared by several date
+        # partitions, so superseded rows keep whole dirs referenced (live
+        # via a sibling partition) — rewriting every partition into one
+        # fresh dir un-references all of them, and vacuum then reclaims
+        # the long run's entire dir backlog.
+        table.compact()
         removed = table.vacuum(keep_versions=1, retention_seconds=0.0)
         live_dirs = len(
             {

@@ -31,6 +31,30 @@ from ..tables import load_table
 _TXN_ROOT = "/tmp/changesetmd_spark_txn_demo"
 
 
+def _fresh_table_path(sf_dir: str, prefix: str) -> str:
+    """A new table directory under ``_TXN_ROOT``, unique per invocation.
+    The returned DataFrame reads its parquet lazily, so deleting a shared
+    fixed path would yank files out from under a previous invocation's
+    still-pending snapshot (or a concurrent bench on the same sf_dir);
+    determinism comes from the data, not the path.  Stale siblings (>1 h
+    old) are swept opportunistically so repeated benches don't accumulate
+    in /tmp."""
+    group = os.path.join(
+        _TXN_ROOT,
+        prefix + hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12],
+    )
+    if os.path.isdir(group):
+        cutoff = time.time() - 3600.0
+        for d in os.listdir(group):
+            full = os.path.join(group, d)
+            try:
+                if os.path.getmtime(full) < cutoff:
+                    shutil.rmtree(full, ignore_errors=True)
+            except OSError:
+                pass
+    return os.path.join(group, uuid.uuid4().hex)
+
+
 @register(
     "q_txn_merge_snapshot",
     oracle="""
@@ -72,26 +96,7 @@ def q_txn_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "event_id", "value", "ts"
     )
-    # Unique per-invocation location: the returned DataFrame reads its
-    # parquet lazily, so deleting a shared fixed path here would yank files
-    # out from under a previous invocation's still-pending snapshot (or a
-    # concurrent bench on the same sf_dir).  Determinism comes from the
-    # data, not the path.  Stale siblings (>1 h old) are swept
-    # opportunistically so repeated benches don't accumulate in /tmp.
-    group = os.path.join(
-        _TXN_ROOT, hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    )
-    if os.path.isdir(group):
-        cutoff = time.time() - 3600.0
-        for d in os.listdir(group):
-            full = os.path.join(group, d)
-            try:
-                if os.path.getmtime(full) < cutoff:
-                    shutil.rmtree(full, ignore_errors=True)
-            except OSError:
-                pass
-    path = os.path.join(group, uuid.uuid4().hex)
-    table = TxnTable(spark, path, partition_source="ts")
+    table = TxnTable(spark, _fresh_table_path(sf_dir, ""), partition_source="ts")
     # the bulk load is itself a MERGE into the empty table so batch-1 rows
     # get the same per-key LWW dedup the reference's loader applies
     table.merge(
@@ -175,21 +180,9 @@ def q_txn_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "event_id", "value", "ts"
     )
-    group = os.path.join(
-        _TXN_ROOT,
-        "cdf-" + hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12],
+    table = TxnTable(
+        spark, _fresh_table_path(sf_dir, "cdf-"), partition_source="ts"
     )
-    if os.path.isdir(group):
-        cutoff = time.time() - 3600.0
-        for d in os.listdir(group):
-            full = os.path.join(group, d)
-            try:
-                if os.path.getmtime(full) < cutoff:
-                    shutil.rmtree(full, ignore_errors=True)
-            except OSError:
-                pass
-    path = os.path.join(group, uuid.uuid4().hex)
-    table = TxnTable(spark, path, partition_source="ts")
     # user_id % 11 = 3 keys are held out of the bulk load entirely so the
     # feed is guaranteed genuine inserts at every SF (not just updates)
     table.merge(

@@ -36,25 +36,32 @@ another snapshot references, so
 
 Concurrency control is optimistic, like Delta's: a writer records the
 version it read, computes, writes its data directory, then tries to commit
-``read_version + 1``.  Losing the race means re-reading the log and either
-**rebasing** (an ``append`` commutes with everything; a ``merge`` commutes
-with commits that touched disjoint partition sets) or **recomputing** (a
-``merge`` over overlapping partitions re-runs its MERGE against the new
-snapshot — the idempotent LWW computation absorbs the replay, T4).  A
-bounded retry loop raises :class:`TxnConflictError` only under sustained
-contention, mirroring the reference's NOWAIT bail-out.
+``read_version + 1``.  Every write (``overwrite``, ``merge``, ``compact``)
+goes through one commit loop; losing the race means re-reading the log and
+**recomputing** against the new snapshot (a ``merge`` re-runs its MERGE —
+the idempotent LWW computation absorbs the replay, T4; a ``compact``
+re-reads what is live now).  A bounded retry loop raises
+:class:`TxnConflictError` only under sustained contention, mirroring the
+reference's NOWAIT bail-out.
+
+Every manifest records the table schema, and every commit directory it
+references was written with that schema: only an overwrite, or a MERGE
+into a table with no live rows, sets a new one; any other MERGE batch is
+projected onto the table's columns.  So reads scan each commit directory
+with the declared schema: no footer inference, no Spark job before the
+query's own.
 
 Scale notes (100 TB): the log holds one small JSON per commit — state
 resolution is O(versions) driver-side metadata, pruned by ``vacuum``
 checkpointing; data directories shard across partitions exactly like the
-plain hive layout, so scans partition-prune identically (``read`` can prune
-whole directories from the manifest before Spark ever lists them); and the
-MERGE itself reuses :func:`..sinks.upsert.latest_per_key` — one window over
-the batch plus a broadcast anti-join, never a shuffle of current data.
+plain hive layout, so scans partition-prune identically; and the MERGE
+itself reuses :func:`..sinks.upsert.latest_per_key` — one window over the
+batch plus a broadcast anti-join, never a shuffle of current data.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -70,6 +77,9 @@ from .upsert import _contains_map, _partition_dirname, latest_per_key
 _LOG_DIR = "_txnlog"
 _DATA_DIR = "data"
 _MAX_COMMIT_RETRIES = 20
+# optimizer size estimate at which a partitioned write hash-clusters its
+# rows by partition value (see TxnTable._cluster_write_gate)
+_CLUSTER_WRITE_BYTES = 256 << 20
 
 
 class TxnConflictError(RuntimeError):
@@ -149,11 +159,17 @@ class TxnTable:
 
     # ---- writing -----------------------------------------------------------
 
+    def _partitioned(self, df: DataFrame) -> bool:
+        return (
+            self.partition_source is not None
+            and self.partition_source in df.columns
+        )
+
     def _published_schema(self, df: DataFrame, partitioned: bool) -> dict:
         """JSON schema as readers will observe it: hive layout appends the
         partition column last, so the recorded schema mirrors that order.
-        Stored in every manifest so a truncated (or fully pruned) snapshot
-        still reads back as a typed empty DataFrame."""
+        Stored in every manifest: reads scan with it, and a truncated
+        snapshot reads back as a typed empty DataFrame."""
         schema = df.schema
         if partitioned:
             pfield = next(
@@ -174,87 +190,73 @@ class TxnTable:
         the extra shuffle measurably LOSES (the r17 experiment), but at
         object-store scale small files dominate, so the hash-distribution
         shuffle (Iceberg write.distribution-mode=hash) engages when the
-        optimizer's size estimate for the frame crosses
-        ``spark.changesetmd.txn.clusterWriteBytes`` (default 256m; the
-        bench corpora sit far below it, so the measured /tmp regime is
-        byte-identical)."""
+        optimizer's size estimate for the frame reaches
+        ``_CLUSTER_WRITE_BYTES`` (256 MiB; the bench corpora sit far below
+        it, so the measured /tmp regime is byte-identical)."""
         try:
-            conf = df.sparkSession.conf.get(
-                "spark.changesetmd.txn.clusterWriteBytes", "256m"
-            )
-            from ..operators.util import _conf_bytes
-
-            threshold = _conf_bytes(conf)
-            if threshold <= 0:
-                return False
             est = int(
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             )
-            if est >= 1 << 62:
-                # RDD-backed plans (createDataFrame, localCheckpoint)
-                # carry the Long.MaxValue default, not a real estimate —
-                # never let "unknown" read as "huge"
-                return False
-            return est >= threshold
         except Exception:  # noqa: BLE001 — sizing is advisory, never fatal
             return False
+        # RDD-backed plans (createDataFrame, localCheckpoint) carry the
+        # Long.MaxValue default, not a real estimate — never let "unknown"
+        # read as "huge"
+        return _CLUSTER_WRITE_BYTES <= est < 1 << 62
 
-    def _write_data_dir(
-        self, df: DataFrame
-    ) -> tuple[str, list[str], bool, dict]:
-        """Write ``df`` into a fresh immutable commit directory; returns
-        (relative dir, partition dirnames inside it, partitioned?,
-        published schema json).  A partitioned write of an empty frame
-        yields ``parts == []`` — callers must NOT fall back to the ``""``
-        pseudo-partition in that case (it would make a partitioned table
-        look unpartitioned to later merges).
-        """
+    def _write_data_dir(self, df: DataFrame) -> tuple[dict[str, list[str]], dict]:
+        """Write ``df`` into a fresh immutable commit directory; returns the
+        live-map entries it provides (partition dirname → ``[dir]``; the
+        ``""`` pseudo-partition when unpartitioned) and the published schema
+        json.  A partitioned write of an empty frame provides no entries —
+        never the ``""`` pseudo-partition, which would make a partitioned
+        table look unpartitioned to later merges."""
         rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
         full = os.path.join(self.path, rel)
-        partitioned = (
-            self.partition_source is not None
-            and self.partition_source in df.columns
+        if not self._partitioned(df):
+            df.write.parquet(full)
+            return {"": [rel]}, self._published_schema(df, False)
+        if self.partition_col not in df.columns:
+            df = df.withColumn(self.partition_col, F.to_date(self.partition_source))
+        if self._cluster_write_gate(df):
+            # hash-cluster rows by partition value so each value is written
+            # by one task — one target-size file per partition instead of
+            # (tasks x partitions) shards
+            df = df.repartition(F.col(self.partition_col))
+        (
+            df.sortWithinPartitions(self.partition_col)
+            .write.partitionBy(self.partition_col)
+            .parquet(full)
         )
-        if partitioned:
-            if self.partition_col not in df.columns:
-                df = df.withColumn(
-                    self.partition_col, F.to_date(self.partition_source)
-                )
-            if self._cluster_write_gate(df):
-                # hash-cluster rows by partition value so each value is
-                # written by one task — one target-size file per partition
-                # instead of (tasks x partitions) shards
-                df = df.repartition(F.col(self.partition_col))
-            (
-                df.sortWithinPartitions(self.partition_col)
-                .write.partitionBy(self.partition_col)
-                .parquet(full)
-            )
-            parts = [
-                d
-                for d in os.listdir(full)
-                if d.startswith(f"{self.partition_col}=")
-            ]
-            return rel, parts, True, self._published_schema(df, True)
-        df.write.parquet(full)
-        return rel, [], False, self._published_schema(df, False)
+        written = {
+            d: [rel]
+            for d in os.listdir(full)
+            if d.startswith(f"{self.partition_col}=")
+        }
+        return written, self._published_schema(df, True)
 
-    @staticmethod
-    def _live_map(manifest: dict | None) -> dict[str, list[str]]:
-        """partition dirname → list of commit dirs holding live rows for it
-        (unpartitioned tables use the single pseudo-partition key ``""``)."""
-        if manifest is None:
-            return {}
-        return {k: list(v) for k, v in manifest["partitions"].items()}
-
-    def _commit_loop(self, op: str, apply, schema: dict) -> int:
-        """Optimistic-commit driver: resolve state → ``apply(live_map)`` →
-        try the next version slot; on losing the race, re-resolve and let
-        ``apply`` rebase or recompute against the new state."""
+    def _commit_loop(self, op: str, apply) -> int:
+        """Optimistic-commit driver for every write.  Resolve the current
+        snapshot, call ``apply(live, schema)`` with its live map (partition
+        dirname → commit dirs holding its live rows; ``""`` keys an
+        unpartitioned table) and recorded schema (``None`` before the first
+        commit), and try to publish the ``(new_live, schema)`` it returns as
+        the next version.  ``apply`` returning ``None`` commits nothing and
+        yields the version it saw.  On a lost race ``apply`` re-runs against
+        the new snapshot, so writes recompute rather than rebase; the data
+        directory a lost attempt wrote is orphaned and swept by
+        :meth:`vacuum`."""
         for _ in range(_MAX_COMMIT_RETRIES):
             read_version = self.current_version()
-            prev = self._manifest(read_version) if read_version >= 0 else None
-            new_live = apply(self._live_map(prev))
+            prev = (
+                self._manifest(read_version)
+                if read_version >= 0
+                else {"partitions": {}, "schema": None}
+            )
+            out = apply(prev["partitions"], prev["schema"])
+            if out is None:
+                return read_version
+            new_live, schema = out
             manifest = {
                 "version": read_version + 1,
                 "op": op,
@@ -270,72 +272,13 @@ class TxnTable:
             f"{self.path!r} ({op})"
         )
 
-    def _commit_empty_batch(self, op: str, df: DataFrame) -> int:
-        """Shared no-op path for an empty micro-batch (ADVICE r6): an empty
-        diff must not register data — on a partitioned table a data commit
-        would create the ``""`` pseudo-partition — but on a NEVER-committed
-        table silently returning ``current_version()`` would hand callers
-        the -1 sentinel where every other commit path returns a real
-        version.  There, publish an empty-but-readable v0 (schema-only
-        manifest, no data directory) so the table exists and reads back as
-        a typed empty DataFrame.  Only slot 0 is ever contended: the
-        existence check re-runs on every retry, so losing the race to a
-        concurrent real commit returns THAT version instead of burning a
-        redundant no-op manifest (which would also supersede the winner's
-        recorded schema with the empty batch's)."""
-        partitioned = (
-            self.partition_source is not None
-            and self.partition_source in df.columns
-        )
-        schema = self._published_schema(df, partitioned)
-        for _ in range(_MAX_COMMIT_RETRIES):
-            v = self.current_version()
-            if v >= 0:
-                return v  # table exists (possibly created by a racer)
-            manifest = {
-                "version": 0,
-                "op": op,
-                "read_version": -1,
-                "ts": time.time(),
-                "partitions": {},
-                "schema": schema,
-            }
-            if self._try_commit(0, manifest):
-                return 0
-        raise TxnConflictError(
-            f"gave up after {_MAX_COMMIT_RETRIES} contended commits on "
-            f"{self.path!r} ({op}, empty batch)"
-        )
-
-    def append(self, df: DataFrame) -> int:
-        """Blind append — commutes with every concurrent commit, so a lost
-        race rebases by re-adding the same (already written) directory.
-        An empty batch (e.g. an empty replication micro-batch) commits no
-        data (see :meth:`_commit_empty_batch`)."""
-        if df.isEmpty():
-            return self._commit_empty_batch("append", df)
-        rel, parts, partitioned, schema = self._write_data_dir(df)
-
-        def apply(live: dict[str, list[str]]) -> dict[str, list[str]]:
-            for p in parts if partitioned else [""]:
-                live.setdefault(p, []).append(rel)
-            return live
-
-        return self._commit_loop("append", apply, schema)
-
     def overwrite(self, df: DataFrame) -> int:
         """Replace the whole table state (DDL create/truncate parity, S7).
         Overwriting with an empty frame is a truncate: the new manifest has
         no live partitions (never the ``""`` pseudo-partition) but keeps
         the schema, so ``read()`` returns a typed empty DataFrame."""
-        rel, parts, partitioned, schema = self._write_data_dir(df)
-
-        def apply(live: dict[str, list[str]]) -> dict[str, list[str]]:
-            if partitioned:
-                return {p: [rel] for p in parts}
-            return {"": [rel]}
-
-        return self._commit_loop("overwrite", apply, schema)
+        written = self._write_data_dir(df)
+        return self._commit_loop("overwrite", lambda live, schema: written)
 
     def changes(
         self, from_version: int, to_version: int, key: str | list[str]
@@ -389,7 +332,6 @@ class TxnTable:
         batch: DataFrame,
         key: str | list[str] = "id",
         order_col: str = "sequence",
-        merge_schema: bool = False,
         order_aware: bool = False,
     ) -> int:
         """Idempotent LWW MERGE (delete-then-insert parity, S6/T4-T5): batch
@@ -415,332 +357,195 @@ class TxnTable:
         duplicate delivery both reach the in-order final state, removing
         the delivery-order contract entirely.  Cost is identical: the same
         affected-partition rewrite, with the anti-join swapped for one
-        window over (affected current ∪ batch) rows."""
+        window over (affected current ∪ batch) rows.
+
+        On a table that holds rows the batch is projected onto the table's
+        columns, so a batch missing one fails loudly.  An empty
+        batch (e.g. an empty replication micro-batch) commits nothing — on
+        a partitioned table a data commit would register the ``""``
+        pseudo-partition — except on a never-committed table, where it
+        publishes a schema-only v0 so callers get a real version and
+        ``read()`` a typed empty frame (ADVICE r6); losing that slot to a
+        concurrent real commit returns the winner's version."""
         key_cols = [key] if isinstance(key, str) else list(key)
         if batch.isEmpty():
-            # empty diff (e.g. an empty replication micro-batch): no data to
-            # merge; publishes a readable empty v0 on a brand-new table
-            return self._commit_empty_batch("merge", batch)
-        for _ in range(_MAX_COMMIT_RETRIES):
-            read_version = self.current_version()
-            prev = self._manifest(read_version) if read_version >= 0 else None
-            live = self._live_map(prev)
+            first = ({}, self._published_schema(batch, self._partitioned(batch)))
+            return self._commit_loop(
+                "merge", lambda live, schema: first if schema is None else None
+            )
 
+        def apply(live, schema):
             incoming = latest_per_key(batch, key=key_cols, order_col=order_col)
             if not live:
-                rel, parts, partitioned, schema = self._write_data_dir(
-                    incoming
-                )
-                new_live = {p: [rel] for p in (parts if partitioned else [""])}
+                return self._write_data_dir(incoming)
+            current = self._read_live(live, schema)
+            keys = incoming.select(*key_cols).distinct()
+            if "" in live:
+                affected = {""}
+                cur_aff = current
             else:
-                current = self._read_live(live)
-                keys = incoming.select(*key_cols).distinct()
-                partitioned = "" not in live
-                if partitioned:
-                    if self.partition_col not in incoming.columns:
-                        incoming = incoming.withColumn(
-                            self.partition_col,
-                            F.to_date(self.partition_source),
-                        )
-                    # partitions to rewrite: where batch keys live now ∪
-                    # where incoming rows land (column-pruned + broadcast
-                    # semi-join — current data never shuffles).  r18: the
-                    # key-location scan only needs partitions the incoming
-                    # batch does NOT already touch — a partition in the
-                    # incoming set is affected regardless of where its keys
-                    # live, so pre-pruning `current` to the complement
-                    # turns the common whole-table-coverage merge's scan
-                    # into a no-partition scan (partition filters prune at
-                    # planning).  Affected set is unchanged by definition.
-                    inc_vals = [
-                        r[0]
-                        for r in incoming.select(self.partition_col)
-                        .distinct()
-                        .collect()
-                    ]
-                    inc_non_null = [v for v in inc_vals if v is not None]
-                    outside = (
-                        ~F.col(self.partition_col).isin(inc_non_null)
-                        if inc_non_null
-                        else F.lit(True)
+                if self.partition_col not in incoming.columns:
+                    incoming = incoming.withColumn(
+                        self.partition_col, F.to_date(self.partition_source)
                     )
-                    # NULL partitions: isin() is NULL-valued on NULL input,
-                    # so include/exclude them explicitly depending on
-                    # whether the batch already covers the NULL partition
-                    if any(v is None for v in inc_vals):
-                        outside = outside & F.col(
-                            self.partition_col
-                        ).isNotNull()
-                    else:
-                        outside = outside | F.col(
-                            self.partition_col
-                        ).isNull()
-                    hit = (
-                        current.select(*key_cols, self.partition_col)
-                        .filter(outside)
-                        .join(F.broadcast(keys), on=key_cols, how="left_semi")
-                        .select(self.partition_col)
-                    )
-                    affected_vals = inc_vals + [
-                        r[0] for r in hit.distinct().collect()
-                    ]
-                    affected = {
-                        _partition_dirname(self.partition_col, v)
-                        for v in affected_vals
-                    }
-                    non_null = [v for v in affected_vals if v is not None]
-                    cond = (
-                        F.col(self.partition_col).isin(non_null)
-                        if non_null
-                        else F.lit(False)
-                    )
-                    if any(v is None for v in affected_vals):
-                        cond = cond | F.col(self.partition_col).isNull()
-                    cur_aff = current.filter(cond)
-                else:
-                    affected = {""}
-                    cur_aff = current
-                if order_aware:
-                    # max-order row per key across current ∪ incoming; the
-                    # _src flag breaks order ties toward incoming so exact
-                    # replays converge (T4) without regressing newer state
-                    from pyspark.sql import Window
-
-                    inc = (
-                        incoming
-                        if merge_schema
-                        else incoming.select(*cur_aff.columns)
-                    )
-                    combined = cur_aff.withColumn(
-                        "_src", F.lit(0)
-                    ).unionByName(
-                        inc.withColumn("_src", F.lit(1)),
-                        allowMissingColumns=merge_schema,
-                    )
-                    # Final tie-break (ADVICE r8): two incoming rows sharing
-                    # key AND order_col would otherwise get an arbitrary
-                    # row_number winner — nondeterministic across replays.
-                    # A content hash over the hashable columns makes the
-                    # winner a pure function of the data (identical-content
-                    # duplicates tie harmlessly: either copy is the same
-                    # row).  Map-typed columns are excluded (Spark's hash
-                    # expressions reject MapType anywhere in the type tree,
-                    # including a map nested inside a struct/array — ADVICE
-                    # r9); key/order columns alone already cover most
-                    # schemas.
-                    hashable = [
-                        f.name
-                        for f in combined.schema.fields
-                        if f.name != "_src"
-                        and not _contains_map(f.dataType)
-                    ]
-                    tie = (
-                        [F.desc(F.xxhash64(*[F.col(c) for c in hashable]))]
-                        if hashable
-                        else []
-                    )
-                    w = Window.partitionBy(*key_cols).orderBy(
-                        F.desc(order_col), F.desc("_src"), *tie
-                    )
-                    new_state = (
-                        combined.withColumn(
-                            "_rn", F.row_number().over(w)
-                        )
-                        .filter(F.col("_rn") == 1)
-                        .drop("_rn", "_src")
-                    )
-                elif merge_schema:
-                    # additive schema evolution (Delta's mergeSchema): new
-                    # batch columns join the table schema; current rows read
-                    # NULL for them.  Strict mode stays the default so a
-                    # typo'd column name fails loudly instead of forking the
-                    # schema.
-                    kept = cur_aff.join(
-                        F.broadcast(keys), on=key_cols, how="left_anti"
-                    )
-                    new_state = kept.unionByName(
-                        incoming, allowMissingColumns=True
-                    )
-                else:
-                    kept = cur_aff.join(
-                        F.broadcast(keys), on=key_cols, how="left_anti"
-                    )
-                    new_state = kept.unionByName(
-                        incoming.select(*kept.columns), allowMissingColumns=False
-                    )
-                rel, parts, partitioned, schema = self._write_data_dir(
-                    new_state
+                # partitions to rewrite: where batch keys live now ∪ where
+                # incoming rows land (column-pruned + broadcast semi-join —
+                # current data never shuffles).  r18: the key-location scan
+                # only needs partitions the incoming batch does NOT already
+                # touch — a partition in the incoming set is affected
+                # regardless of where its keys live, so pre-pruning
+                # `current` to the complement turns the common
+                # whole-table-coverage merge's scan into a no-partition scan
+                # (partition filters prune at planning).  Affected set is
+                # unchanged by definition.
+                inc_vals = [
+                    r[0]
+                    for r in incoming.select(self.partition_col)
+                    .distinct()
+                    .collect()
+                ]
+                inc_non_null = [v for v in inc_vals if v is not None]
+                outside = (
+                    ~F.col(self.partition_col).isin(inc_non_null)
+                    if inc_non_null
+                    else F.lit(True)
                 )
-                new_live = dict(live)
-                for p in affected:
-                    new_live.pop(p, None)  # partition lost all its rows
-                for p in parts if partitioned else [""]:
-                    new_live[p] = [rel]
+                # NULL partitions: isin() is NULL-valued on NULL input, so
+                # include/exclude them explicitly depending on whether the
+                # batch already covers the NULL partition
+                if any(v is None for v in inc_vals):
+                    outside = outside & F.col(self.partition_col).isNotNull()
+                else:
+                    outside = outside | F.col(self.partition_col).isNull()
+                hit = (
+                    current.select(*key_cols, self.partition_col)
+                    .filter(outside)
+                    .join(F.broadcast(keys), on=key_cols, how="left_semi")
+                    .select(self.partition_col)
+                )
+                affected_vals = inc_vals + [r[0] for r in hit.distinct().collect()]
+                affected = {
+                    _partition_dirname(self.partition_col, v)
+                    for v in affected_vals
+                }
+                non_null = [v for v in affected_vals if v is not None]
+                cond = (
+                    F.col(self.partition_col).isin(non_null)
+                    if non_null
+                    else F.lit(False)
+                )
+                if any(v is None for v in affected_vals):
+                    cond = cond | F.col(self.partition_col).isNull()
+                cur_aff = current.filter(cond)
+            incoming = incoming.select(*cur_aff.columns)
+            if order_aware:
+                # max-order row per key across current ∪ incoming; the _src
+                # flag breaks order ties toward incoming so exact replays
+                # converge (T4) without regressing newer state
+                from pyspark.sql import Window
 
-            manifest = {
-                "version": read_version + 1,
-                "op": "merge",
-                "read_version": read_version,
-                "ts": time.time(),
-                "partitions": new_live,
-                "schema": schema,
-            }
-            if self._try_commit(read_version + 1, manifest):
-                return read_version + 1
-            # Lost the race: loop back and recompute the MERGE against the
-            # new snapshot (see docstring — rebasing a merge is unsound at
-            # key level).  The already-written data dir is orphaned and will
-            # be swept by vacuum().
-        raise TxnConflictError(
-            f"gave up after {_MAX_COMMIT_RETRIES} contended commits on "
-            f"{self.path!r} (merge)"
-        )
+                combined = cur_aff.withColumn("_src", F.lit(0)).unionByName(
+                    incoming.withColumn("_src", F.lit(1))
+                )
+                # Final tie-break (ADVICE r8): two incoming rows sharing key
+                # AND order_col would otherwise get an arbitrary row_number
+                # winner — nondeterministic across replays.  A content hash
+                # over the hashable columns makes the winner a pure function
+                # of the data (identical-content duplicates tie harmlessly:
+                # either copy is the same row).  Map-typed columns are
+                # excluded (Spark's hash expressions reject MapType anywhere
+                # in the type tree, including a map nested inside a
+                # struct/array — ADVICE r9); key/order columns alone already
+                # cover most schemas.
+                hashable = [
+                    f.name
+                    for f in combined.schema.fields
+                    if f.name != "_src" and not _contains_map(f.dataType)
+                ]
+                tie = (
+                    [F.desc(F.xxhash64(*[F.col(c) for c in hashable]))]
+                    if hashable
+                    else []
+                )
+                w = Window.partitionBy(*key_cols).orderBy(
+                    F.desc(order_col), F.desc("_src"), *tie
+                )
+                new_state = (
+                    combined.withColumn("_rn", F.row_number().over(w))
+                    .filter(F.col("_rn") == 1)
+                    .drop("_rn", "_src")
+                )
+            else:
+                new_state = cur_aff.join(
+                    F.broadcast(keys), on=key_cols, how="left_anti"
+                ).unionByName(incoming)
+            written, new_schema = self._write_data_dir(new_state)
+            # an affected partition absent from `written` lost all its rows
+            new_live = {p: d for p, d in live.items() if p not in affected}
+            new_live.update(written)
+            return new_live, new_schema
+
+        return self._commit_loop("merge", apply)
 
     # ---- reading -----------------------------------------------------------
 
-    def _read_live(self, live: dict[str, list[str]]) -> DataFrame:
-        # mergeSchema + allowMissingColumns: commit dirs written before a
-        # schema evolution (see ``merge(merge_schema=True)`` / ``append``)
-        # lack the newer columns — readers see them as NULL, exactly
-        # Delta/Iceberg's add-column semantics.  Columns are only ever
-        # ADDED (no type overwrite), so the merge is conflict-free.
+    def _read_live(self, live: dict[str, list[str]], schema: dict) -> DataFrame:
+        """Scan the live rows with the manifest's declared schema: inferring
+        it from parquet footers would cost a Spark job per commit directory.
+        A partitioned table is one scan per commit directory — ``basePath``
+        keeps the partition column — unioned; no live rows read as a typed
+        empty frame."""
+        struct = StructType.fromJson(schema)
+        if not live:
+            return self.spark.createDataFrame([], struct)
         if set(live) == {""}:
-            return self.spark.read.option("mergeSchema", "true").parquet(
+            return self.spark.read.schema(struct).parquet(
                 *[os.path.join(self.path, d) for d in sorted(set(live[""]))]
             )
-        # partitioned: group live partitions by commit dir so each directory
-        # is read once with basePath (keeps the partition column), then
-        # union — Spark plans one multi-path scan per commit dir.
         by_dir: dict[str, list[str]] = {}
         for part, dirs in live.items():
             for d in dirs:
                 by_dir.setdefault(d, []).append(part)
-        frames = []
-        for d, parts in sorted(by_dir.items()):
-            base = os.path.join(self.path, d)
-            frames.append(
-                self.spark.read.option("basePath", base)
-                .option("mergeSchema", "true")
-                .parquet(*[os.path.join(base, p) for p in sorted(parts)])
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        return out
+        frames = [
+            self.spark.read.schema(struct)
+            .option("basePath", os.path.join(self.path, d))
+            .parquet(*[os.path.join(self.path, d, p) for p in sorted(parts)])
+            for d, parts in sorted(by_dir.items())
+        ]
+        return functools.reduce(DataFrame.union, frames)
 
-    def _empty_frame(self, manifest: dict, v: int) -> DataFrame:
-        """Typed empty DataFrame for a snapshot with no live rows (Delta
-        parity: truncate is readable, ADVICE r6).  Manifests written before
-        schema recording fall back to the newest older manifest that has a
-        schema, then to a ``limit(0)`` over any older live data."""
-        schema = manifest.get("schema")
-        if schema is None:
-            for ov in reversed(self.versions()):
-                if ov >= v:
-                    continue
-                m = self._manifest(ov)
-                if m.get("schema") is not None:
-                    schema = m["schema"]
-                    break
-                old_live = self._live_map(m)
-                if old_live:
-                    return self._read_live(old_live).limit(0)
-        if schema is None:
-            raise ValueError(
-                f"transactional table {self.path!r} has no live data at "
-                f"v{v} and no recorded schema"
-            )
-        return self.spark.createDataFrame([], StructType.fromJson(schema))
-
-    def read(
-        self, version: int | None = None, partitions: list | None = None
-    ) -> DataFrame:
-        """Snapshot read.  ``version`` time-travels; ``partitions`` (a list
-        of partition values) prunes whole directories out of the scan from
-        the manifest alone — Spark never lists the skipped ones.  A
-        truncated snapshot (or one whose pruning matches nothing) reads as
-        a typed empty DataFrame, matching unpartitioned truncate and the
-        lakehouse formats' behavior."""
+    def read(self, version: int | None = None) -> DataFrame:
+        """Snapshot read of ``version`` (default: the current one; an older
+        one is time travel).  A snapshot with no live rows — a truncate, or
+        the schema-only v0 of an empty first batch — reads as a typed empty
+        DataFrame, matching the lakehouse formats."""
         v = self.current_version() if version is None else version
         if v < 0:
             raise ValueError(f"transactional table {self.path!r} is empty")
         manifest = self._manifest(v)
-        live = self._live_map(manifest)
-        if partitions is not None and "" not in live:
-            wanted = {
-                _partition_dirname(self.partition_col, p) for p in partitions
-            }
-            live = {p: d for p, d in live.items() if p in wanted}
-        if not live:
-            return self._empty_frame(manifest, v)
-        return self._read_live(live)
+        return self._read_live(manifest["partitions"], manifest["schema"])
 
     # ---- maintenance -------------------------------------------------------
 
-    def compact(
-        self, partitions: list | None = None, min_dirs: int = 2
-    ) -> int:
-        """Bin-pack fragmented partitions: every partition referenced by
-        ``min_dirs``-or-more commit directories is rewritten into ONE fresh
-        directory, transactionally.  This is the OPTIMIZE/compaction half of
-        lakehouse maintenance (vacuum is the other): a replication stream
-        appending minutely micro-batches (T1/T2) leaves each date partition
-        scattered across hundreds of small files, and at 100 TB the scan's
-        file-listing + per-file open cost dominates — compaction restores
-        target-size files without blocking readers (snapshot isolation) or
-        writers (optimistic commit).
+    def compact(self) -> int:
+        """OPTIMIZE: when the live partitions span more than one commit
+        directory, rewrite them all into one fresh directory,
+        transactionally; otherwise commit nothing and return the current
+        version.  A merge leaves each partition it touches in exactly one
+        directory, but merges into different partitions leave one directory
+        per commit, and a directory that still holds one live partition
+        keeps its superseded ones on disk.  After compaction every older
+        directory is unreferenced by the new manifest, so :meth:`vacuum`
+        can reclaim it; until then they serve time travel.  Readers are
+        never blocked (snapshot isolation), and a lost race re-reads the
+        new snapshot, so a concurrent commit's rows are never dropped."""
 
-        Concurrency: compaction only REPLACES directory references for rows
-        it re-wrote byte-identically, so winning the ``read_version + 1``
-        slot proves no interleaved commit — on a lost race it re-snapshots
-        and recomputes (an appended dir or a merge rewrite must not be
-        dropped).  ``partitions`` limits the pass (maintenance windows);
-        the orphaned pre-compaction dirs stay referenced by OLDER manifests
-        for time travel and are reclaimed by ``vacuum()``."""
-        wanted = (
-            None
-            if partitions is None
-            else {
-                _partition_dirname(self.partition_col, p) for p in partitions
-            }
-        )
-        for _ in range(_MAX_COMMIT_RETRIES):
-            read_version = self.current_version()
-            if read_version < 0:
-                return read_version  # empty table: nothing to compact
-            live = self._live_map(self._manifest(read_version))
-            targets = {
-                p: dirs
-                for p, dirs in live.items()
-                if len(dirs) >= min_dirs and (wanted is None or p in wanted)
-            }
-            if not targets:
-                return read_version  # already compact — no empty commit
-            rel, parts, partitioned, schema = self._write_data_dir(
-                self._read_live(targets)
-            )
-            new_live = dict(live)
-            for p in targets:
-                new_live.pop(p, None)
-            for p in parts if partitioned else [""]:
-                new_live[p] = [rel]
-            manifest = {
-                "version": read_version + 1,
-                "op": "compact",
-                "read_version": read_version,
-                "ts": time.time(),
-                "partitions": new_live,
-                "schema": schema,
-            }
-            if self._try_commit(read_version + 1, manifest):
-                return read_version + 1
-            # lost the race: the rewritten rows may be stale (a concurrent
-            # merge/append touched the table) — recompute from the new
-            # snapshot; the orphaned dir is swept by vacuum()
-        raise TxnConflictError(
-            f"gave up after {_MAX_COMMIT_RETRIES} contended commits on "
-            f"{self.path!r} (compact)"
-        )
+        def apply(live, schema):
+            if len({d for dirs in live.values() for d in dirs}) < 2:
+                return None
+            return self._write_data_dir(self._read_live(live, schema))
+
+        return self._commit_loop("compact", apply)
 
     def vacuum(
         self, keep_versions: int = 10, retention_seconds: float = 3600.0

@@ -64,7 +64,6 @@ def run_replication_stream(
     checkpoint_dir: str,
     await_termination: bool = True,
     max_files_per_trigger: int | None = None,
-    compact_every: int | None = None,
     order_aware: bool = False,
 ):
     """Consume every currently-available diff (availableNow) and MERGE it
@@ -81,13 +80,12 @@ def run_replication_stream(
     table back with ``TxnTable(spark, table_dir).read()``.  The normalized
     micro-batch is persisted around the MERGE, whose eager actions would
     otherwise re-parse the diff XML once per action.  Once an awaited query
-    terminates, ``TxnTable.vacuum()`` (default retention) reclaims the
-    commit directories the stream superseded.
-
-    ``compact_every``: run transactional bin-pack compaction after every N
-    micro-batches — long-run maintenance interleaved with ingest, the
-    lakehouse OPTIMIZE cadence a minutely stream needs so date partitions
-    don't fragment into one small file per commit.
+    terminates, ``TxnTable.vacuum()`` runs with its defaults: it deletes
+    only directories that no manifest among the 10 newest references and
+    that are older than an hour, so after a run shorter than that every
+    superseded commit directory stays on disk until a later vacuum.
+    ``TxnTable.compact()`` followed by ``vacuum`` with a shorter retention
+    is the maintenance pass that collapses them.
 
     ``order_aware=True`` switches the MERGE to max-sequence-wins across
     current ∪ incoming (see :meth:`TxnTable.merge`): the stream then
@@ -111,8 +109,6 @@ def run_replication_stream(
             )
         finally:
             normalized.unpersist()
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            table.compact()
 
     q = (
         diffs.writeStream.foreachBatch(apply_batch)

@@ -142,10 +142,9 @@ def test_stream_builders_leave_session_conf_untouched(spark, sf_dir):
 def test_streaming_replication_steady_state_batches(spark, tmp_path):
     """The long-run knobs (VERDICT r7 #8): ``max_files_per_trigger`` bounds
     each micro-batch while availableNow still drains the whole backlog
-    (one atomic MERGE commit per bounded batch), ``compact_every``
-    interleaves the transactional OPTIMIZE pass with ingest without
-    corrupting state, and the post-run full compact + vacuum collapse the
-    commit-history backlog to one live data dir with rows intact."""
+    (one atomic MERGE commit per bounded batch), and the post-run compact +
+    vacuum collapse the commit-history backlog to one live data dir with
+    rows intact."""
     src = str(tmp_path / "diffs")
     table_dir = str(tmp_path / "store" / "cs_txn")
     ckpt = str(tmp_path / "ckpt")
@@ -158,16 +157,13 @@ def test_streaming_replication_steady_state_batches(spark, tmp_path):
             [_cs(seq - 100, False, seq - 100), _cs(seq - 99, True, 1)],
         )
     run_replication_stream(
-        spark, src, table_dir, ckpt,
-        max_files_per_trigger=3, compact_every=2,
+        spark, src, table_dir, ckpt, max_files_per_trigger=3
     )
     table = TxnTable(spark, table_dir, partition_source="created_at")
 
     ops = [m["op"] for m in table.history()]
-    # 9 files / 3 per trigger = exactly 3 bounded merge commits (the
-    # compact_every passes no-op on a merge-only workload — every touched
-    # partition is already single-dir — and must not add empty commits)
-    assert ops.count("merge") == 3, ops
+    # 9 files / 3 per trigger = exactly 3 bounded merge commits
+    assert ops == ["merge"] * 3, ops
 
     def rows():
         return sorted(
@@ -187,9 +183,9 @@ def test_streaming_replication_steady_state_batches(spark, tmp_path):
     expected[-1] = (10, False, 7)
     assert rows() == expected
 
-    # long-run maintenance: full OPTIMIZE unshards the commit dirs, vacuum
+    # long-run maintenance: OPTIMIZE unshards the commit dirs, vacuum
     # reclaims every unreferenced one; data survives bit-identically
-    table.compact(min_dirs=1)
+    table.compact()
     removed = table.vacuum(keep_versions=1, retention_seconds=0.0)
     live = {
         d

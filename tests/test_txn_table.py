@@ -11,8 +11,8 @@ import datetime
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
+from changesetmd_spark.sinks import txn_table
 from changesetmd_spark.sinks.txn_table import TxnConflictError, TxnTable
 
 
@@ -30,6 +30,17 @@ def _mk(spark, rows):
 
 D1 = datetime.datetime(2024, 1, 1, 10, 0)
 D2 = datetime.datetime(2024, 1, 2, 10, 0)
+D3 = datetime.datetime(2024, 1, 3, 10, 0)
+
+
+def _live(table, version=None):
+    """The live map of ``version`` (default: current)."""
+    v = table.current_version() if version is None else version
+    return table._manifest(v)["partitions"]
+
+
+def _merge(table, spark, rows):
+    return table.merge(_mk(spark, rows), key="id", order_col="sequence")
 
 
 @pytest.fixture()
@@ -50,18 +61,9 @@ def test_overwrite_read_roundtrip_and_time_travel(spark, table):
     assert _rows(table.read(version=0).select("id", "payload")) == first
 
 
-def test_append_accumulates_across_commits(spark, table):
-    table.append(_mk(spark, [(1, 1, D1, "a")]))
-    table.append(_mk(spark, [(2, 1, D1, "b"), (3, 1, D2, "c")]))
-    assert _rows(table.read().select("id")) == [(1,), (2,), (3,)]
-    # both commits' files are live in the D1 partition
-    live = table._live_map(table._manifest(table.current_version()))
-    assert len(live["created_date=2024-01-01"]) == 2
-
-
 def test_merge_lww_and_partition_scoped_rewrite(spark, table):
     table.overwrite(_mk(spark, [(1, 1, D1, "old1"), (2, 1, D2, "old2")]))
-    live_before = table._live_map(table._manifest(table.current_version()))
+    live_before = _live(table)
     # batch holds two versions of id=1 → LWW keeps sequence 3; id=2 untouched
     table.merge(
         _mk(spark, [(1, 2, D1, "mid"), (1, 3, D1, "new1")]),
@@ -72,7 +74,7 @@ def test_merge_lww_and_partition_scoped_rewrite(spark, table):
         (1, "new1"),
         (2, "old2"),
     ]
-    live_after = table._live_map(table._manifest(table.current_version()))
+    live_after = _live(table)
     # only the D1 partition's files changed; D2 still points at the same dir
     assert (
         live_after["created_date=2024-01-02"]
@@ -107,8 +109,8 @@ def test_lost_race_disjoint_partitions_rebases(spark, table):
     def racing(version, manifest):
         if not fired["done"]:
             fired["done"] = True
-            # concurrent writer appends into D2 and steals our slot
-            writer2.append(_mk(spark, [(9, 1, D2, "z")]))
+            # concurrent writer adds a key in D2 and steals our slot
+            _merge(writer2, spark, [(9, 1, D2, "z")])
         return real(version, manifest)
 
     table._try_commit = racing
@@ -158,15 +160,14 @@ def test_sustained_contention_raises(spark, table):
     table.overwrite(_mk(spark, [(1, 1, D1, "a")]))
     table._try_commit = lambda version, manifest: False
     with pytest.raises(TxnConflictError):
-        table.append(_mk(spark, [(2, 1, D1, "b")]))
+        _merge(table, spark, [(2, 1, D1, "b")])
 
 
 def test_uncommitted_data_invisible_and_vacuumed(spark, table):
     table.overwrite(_mk(spark, [(1, 1, D1, "a")]))
     # a crashed writer: data directory written, commit never happened
-    orphan_rel, _, _, _ = table._write_data_dir(
-        _mk(spark, [(99, 1, D1, "ghost")])
-    )
+    written, _ = table._write_data_dir(_mk(spark, [(99, 1, D1, "ghost")]))
+    (orphan_rel,) = set(sum(written.values(), []))
     assert _rows(table.read().select("id")) == [(1,)]
     removed = table.vacuum(keep_versions=10, retention_seconds=0.0)
     assert orphan_rel in removed
@@ -201,7 +202,7 @@ def test_manifest_commit_is_atomic_no_partial_state(spark, table):
     """Every version file on disk must parse as complete JSON (the tmp+link
     protocol); no .tmp files survive a commit."""
     table.overwrite(_mk(spark, [(1, 1, D1, "a")]))
-    table.append(_mk(spark, [(2, 1, D2, "b")]))
+    _merge(table, spark, [(2, 1, D2, "b")])
     log = table._log_path()
     names = os.listdir(log)
     assert all(not n.startswith(".tmp-") for n in names)
@@ -240,7 +241,7 @@ def test_concurrent_merges_from_threads_both_land(spark, table):
 
 
 def test_txn_model_based_random_ops(spark, tmp_path):
-    """Model-based check: a random mix of overwrite/append/merge against a
+    """Model-based check: a random mix of overwrite/merge against a
     plain dict model — the committed snapshot must always equal the model.
     (Deterministic op list; hypothesis-style state-machine without the
     per-example Spark session cost.)"""
@@ -249,20 +250,17 @@ def test_txn_model_based_random_ops(spark, tmp_path):
     ops = [
         ("overwrite", [(1, 1, D1, "a"), (2, 1, D2, "b"), (3, 1, D1, "c")]),
         ("merge", [(2, 5, D2, "b2"), (4, 1, D1, "d")]),
-        ("append", [(5, 1, D2, "e")]),
+        ("merge", [(5, 1, D3, "e")]),
         ("merge", [(5, 9, D2, "e2"), (1, 2, D1, "a2")]),
         ("overwrite", [(7, 1, D1, "g")]),
         ("merge", [(7, 3, D1, "g2"), (8, 1, D2, "h")]),
-        ("append", [(9, 1, D1, "i")]),
+        ("merge", [(9, 1, D3, "i")]),
         ("merge", [(9, 2, D1, "i2")]),
     ]
     for op, rows in ops:
         if op == "overwrite":
             t.overwrite(_mk(spark, rows))
             model = {r[0]: r for r in rows}
-        elif op == "append":
-            t.append(_mk(spark, rows))
-            model.update({r[0]: r for r in rows})
         else:
             t.merge(_mk(spark, rows), key="id", order_col="sequence")
             best: dict[int, tuple] = {}
@@ -289,9 +287,9 @@ def test_lost_race_same_key_other_partition_no_duplicate(spark, table):
     def racing(version, manifest):
         if not fired["done"]:
             fired["done"] = True
-            # concurrent writer lands key 1 in the D2 partition — outside
+            # concurrent writer moves key 1 to the D2 partition — outside
             # the D1 'affected' set our in-flight merge computed
-            writer2.append(_mk(spark, [(1, 2, D2, "theirs")]))
+            _merge(writer2, spark, [(1, 2, D2, "theirs")])
         return real(version, manifest)
 
     table._try_commit = racing
@@ -308,29 +306,34 @@ def test_empty_batch_on_new_table_publishes_readable_v0(spark, table):
     It publishes a schema-only v0 (no data dir, no "" pseudo-partition)
     that reads as a typed empty frame, and later writes proceed normally."""
     empty = _mk(spark, []).limit(0)
-    v = table.append(empty)
+    v = table.merge(empty, key="id", order_col="sequence")
     assert v == 0
-    assert table._live_map(table._manifest(0)) == {}
+    assert _live(table, 0) == {}
     got = table.read()
     assert got.count() == 0
     assert "created_date" in got.columns  # partitioned schema published
     # a second empty batch is a pure no-op at the existing version
     assert table.merge(empty, key="id", order_col="sequence") == 0
+    assert table.versions() == [0]
     table.merge(_mk(spark, [(1, 1, D1, "a")]), key="id", order_col="sequence")
     assert _rows(table.read().select("id", "payload")) == [(1, "a")]
 
 
 def test_empty_batch_append_and_merge_are_noops(spark, table):
     """An empty micro-batch (e.g. an empty replication diff) must not
-    commit: on a partitioned table it would otherwise register the ""
-    pseudo-partition and corrupt partition resolution for later merges."""
+    commit, in either merge mode: on a partitioned table it would otherwise
+    register the "" pseudo-partition and corrupt partition resolution for
+    later merges."""
     table.overwrite(_mk(spark, [(1, 1, D1, "a")]))
     v = table.current_version()
     empty = _mk(spark, []).limit(0)
-    assert table.append(empty) == v
     assert table.merge(empty, key="id", order_col="sequence") == v
+    assert (
+        table.merge(empty, key="id", order_col="sequence", order_aware=True)
+        == v
+    )
     assert table.current_version() == v
-    live = table._live_map(table._manifest(v))
+    live = _live(table, v)
     assert "" not in live
     # and the table still merges correctly afterwards (partitioned branch)
     table.merge(_mk(spark, [(1, 5, D1, "a2")]), key="id", order_col="sequence")
@@ -341,37 +344,43 @@ def test_overwrite_empty_truncates_partitioned_table(spark, table):
     table.overwrite(_mk(spark, [(1, 1, D1, "a")]))
     full = table.read()
     table.overwrite(_mk(spark, []).limit(0))
-    live = table._live_map(table._manifest(table.current_version()))
+    live = _live(table)
     assert live == {}  # truly empty — no "" pseudo-partition
     # truncate reads back as a TYPED empty frame (Delta parity, ADVICE r6)
     # with the same schema a populated snapshot shows
     empty = table.read()
     assert empty.count() == 0
     assert empty.schema == full.schema
-    # partition pruning to nothing is likewise empty, not an error
-    assert table.read(partitions=[D2.date()]).count() == 0
     # and the table recovers on the next write
     table.merge(_mk(spark, [(2, 1, D2, "b")]), key="id", order_col="sequence")
     assert _rows(table.read().select("id", "payload")) == [(2, "b")]
 
 
+def _one_dir_per_partition(spark, table, n=3):
+    """Merges into ``n`` different date partitions: one commit directory
+    per partition."""
+    for i in range(n):
+        day = datetime.datetime(2024, 1, 1 + i, 10, 0)
+        _merge(table, spark, [(i, 1, day, f"p{i}")])
+
+
+def _live_dirs(table, version=None):
+    return {d for dirs in _live(table, version).values() for d in dirs}
+
+
 def test_compact_consolidates_fragmented_partitions(spark, table):
-    """OPTIMIZE parity: N appends fragment a partition into N dirs; compact
-    rewrites them into one, preserves rows exactly, keeps time travel."""
-    for i in range(4):
-        table.append(_mk(spark, [(i, 1, D1, f"p{i}")]))
-    table.append(_mk(spark, [(99, 1, D2, "z")]))
+    """OPTIMIZE parity: merges into different partitions leave one commit
+    dir each; compact rewrites every live partition into one dir, preserves
+    rows exactly, keeps time travel."""
+    _one_dir_per_partition(spark, table, 4)
     before = _rows(table.read().select("id", "payload"))
     v_before = table.current_version()
-    live = table._live_map(table._manifest(v_before))
-    assert len(live["created_date=2024-01-01"]) == 4
+    assert len(_live_dirs(table)) == 4
 
     v = table.compact()
     assert v == v_before + 1
-    live = table._live_map(table._manifest(v))
-    assert len(live["created_date=2024-01-01"]) == 1
-    # D2 had a single dir: untouched by the default min_dirs=2
-    assert len(live["created_date=2024-01-02"]) == 1
+    assert len(_live_dirs(table, v)) == 1
+    assert set(_live(table, v)) == set(_live(table, v_before))
     assert _rows(table.read().select("id", "payload")) == before
     # time travel still sees the pre-compaction state
     assert _rows(table.read(version=v_before).select("id", "payload")) == before
@@ -379,57 +388,37 @@ def test_compact_consolidates_fragmented_partitions(spark, table):
 
 
 def test_compact_noop_when_already_compact(spark, table):
-    table.append(_mk(spark, [(1, 1, D1, "a")]))
+    table.overwrite(_mk(spark, [(1, 1, D1, "a"), (2, 1, D2, "b")]))
     v = table.current_version()
-    assert table.compact() == v  # no empty commit
-    assert table.compact(partitions=[datetime.date(2024, 1, 1)]) == v
-
-
-def test_compact_scoped_to_partition_list(spark, table):
-    for i in range(3):
-        table.append(_mk(spark, [(i, 1, D1, "a"), (100 + i, 1, D2, "b")]))
-    v = table.compact(partitions=[datetime.date(2024, 1, 2)])
-    live = table._live_map(table._manifest(v))
-    assert len(live["created_date=2024-01-02"]) == 1
-    assert len(live["created_date=2024-01-01"]) == 3  # out of scope
-    assert _rows(table.read().select("id")) == sorted(
-        [(i,) for i in range(3)] + [(100 + i,) for i in range(3)]
-    )
+    assert table.compact() == v  # one live dir: no empty commit
+    _merge(table, spark, [(3, 1, D3, "c")])
+    v = table.compact()
+    assert table.compact() == v  # compacted once, nothing left to do
 
 
 def test_compact_then_vacuum_reclaims_fragments(spark, table):
-    for i in range(3):
-        table.append(_mk(spark, [(i, 1, D1, f"p{i}")]))
+    _one_dir_per_partition(spark, table, 3)
     v = table.compact()
     removed = table.vacuum(keep_versions=1, retention_seconds=0.0)
-    # the 3 fragment dirs are unreferenced by the surviving manifest
+    # the 3 per-commit dirs are unreferenced by the surviving manifest
     assert len(removed) == 3
     assert _rows(table.read().select("id")) == [(0,), (1,), (2,)]
     assert table.versions() == [v]
 
 
-def test_compact_unpartitioned_table(spark, tmp_path):
-    t = TxnTable(spark, str(tmp_path / "u"))
-    for i in range(3):
-        t.append(_mk(spark, [(i, 1, D1, "x")]))
-    v = t.compact()
-    live = t._live_map(t._manifest(v))
-    assert set(live) == {""} and len(live[""]) == 1
-    assert _rows(t.read().select("id")) == [(0,), (1,), (2,)]
-
-
 def test_compact_lost_race_recomputes_with_concurrent_append(spark, table):
     """A commit that lands between compact's snapshot and its publish must
-    not be dropped: simulate by injecting an append at first publish."""
-    for i in range(3):
-        table.append(_mk(spark, [(i, 1, D1, f"p{i}")]))
+    not be dropped: simulate by injecting a concurrent writer's merge of a
+    new key at first publish."""
+    _one_dir_per_partition(spark, table, 3)
+    writer2 = TxnTable(spark, table.path, partition_source="created_at")
     real_try = table._try_commit
     state = {"raced": False}
 
     def racing_try(version, manifest):
         if not state["raced"]:
             state["raced"] = True
-            table.append(_mk(spark, [(7, 1, D1, "late")]))
+            _merge(writer2, spark, [(7, 1, D1, "late")])
             # version slot now taken -> compact must lose and recompute
         return real_try(version, manifest)
 
@@ -439,33 +428,42 @@ def test_compact_lost_race_recomputes_with_concurrent_append(spark, table):
     finally:
         table._try_commit = real_try
     assert state["raced"]
-    live = table._live_map(table._manifest(v))
-    assert len(live["created_date=2024-01-01"]) == 1
+    assert table._manifest(v)["op"] == "compact"
+    assert len(_live_dirs(table, v)) == 1
     assert _rows(table.read().select("id")) == [(0,), (1,), (2,), (7,)]
 
 
-def test_append_schema_evolution_reads_null_for_old_rows(spark, table):
-    """Additive column evolution: a later append carries a new column; the
-    snapshot read merges schemas and old rows surface NULL (Delta/Iceberg
-    add-column semantics)."""
-    table.append(_mk(spark, [(1, 1, D1, "a")]))
-    wide = _mk(spark, [(2, 1, D2, "b")]).withColumn("score", F.lit(7))
-    table.append(wide)
-    got = {r.id: r.asDict().get("score") for r in table.read().collect()}
-    assert got == {1: None, 2: 7}
-
-
-def test_merge_schema_evolution_opt_in(spark, table):
-    table.overwrite(_mk(spark, [(1, 1, D1, "a"), (2, 1, D1, "b")]))
-    batch = _mk(spark, [(2, 5, D1, "b2")]).withColumn("score", F.lit(9))
-    table.merge(batch, key="id", order_col="sequence", merge_schema=True)
-    rows = {r.id: (r.payload, r.asDict().get("score")) for r in table.read().collect()}
-    assert rows == {1: ("a", None), 2: ("b2", 9)}
+def test_read_scans_with_manifest_schema_no_spark_job(spark, table):
+    """read() types its scan from the manifest: building the snapshot frame
+    over several commit dirs launches no Spark job (schema inference would
+    launch one per dir), and the frame has the published schema."""
+    _one_dir_per_partition(spark, table, 3)
+    assert len(_live_dirs(table)) == 3
+    sc = spark.sparkContext
+    group = "txn-read-no-job"
+    sc.setJobGroup(group, "TxnTable.read() plan only")
+    try:
+        df = table.read()
+        schema = df.schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert [(f.name, f.dataType.simpleString()) for f in schema.fields] == [
+        ("id", "bigint"),
+        ("sequence", "bigint"),
+        ("created_at", "timestamp"),
+        ("payload", "string"),
+        ("created_date", "date"),
+    ]
+    assert _rows(df.select("id", "payload", "created_date")) == [
+        (i, f"p{i}", datetime.date(2024, 1, 1 + i)) for i in range(3)
+    ]
 
 
 def test_merge_strict_mode_rejects_missing_columns(spark, table):
-    """Without merge_schema, a batch missing a table column must fail
-    loudly, not silently fork the schema."""
+    """A batch missing a table column must fail loudly, not silently fork
+    the schema."""
     table.overwrite(_mk(spark, [(1, 1, D1, "a")]))
     bad = _mk(spark, [(2, 2, D1, "x")]).drop("payload")
     with pytest.raises(Exception):
@@ -528,7 +526,7 @@ def test_merge_order_aware_partition_migration(spark, table):
     assert _rows(table.read().select("id", "sequence", "payload")) == [
         (1, 5, "newer-in-d2")
     ]
-    live = table._live_map(table._manifest(table.current_version()))
+    live = _live(table)
     assert "created_date=2024-01-01" not in live  # no stale-row partition
     # and the mirror case: newer incoming moves the row D2 -> D1
     table.merge(
@@ -538,7 +536,7 @@ def test_merge_order_aware_partition_migration(spark, table):
         order_aware=True,
     )
     assert _rows(table.read().select("id", "payload")) == [(1, "newest-in-d1")]
-    live = table._live_map(table._manifest(table.current_version()))
+    live = _live(table)
     assert "created_date=2024-01-02" not in live
 
 
@@ -575,7 +573,9 @@ def _parquet_files(root):
     return out
 
 
-def test_cluster_write_gate_rows_identical_fewer_files(spark, tmp_path):
+def test_cluster_write_gate_rows_identical_fewer_files(
+    spark, tmp_path, monkeypatch
+):
     """r18 size-gated clustered write (guide §6 small-files): forcing the
     gate on must hash-cluster rows by partition value — one file per value
     per commit instead of (tasks x values) shards — with byte-identical
@@ -599,14 +599,11 @@ def test_cluster_write_gate_rows_identical_fewer_files(spark, tmp_path):
             spark, str(tmp_path / "plain"), partition_source="created_at"
         )
         plain.merge(batch, key="id", order_col="sequence")
-        spark.conf.set("spark.changesetmd.txn.clusterWriteBytes", "1")
-        try:
-            gated = TxnTable(
-                spark, str(tmp_path / "gated"), partition_source="created_at"
-            )
-            gated.merge(batch, key="id", order_col="sequence")
-        finally:
-            spark.conf.unset("spark.changesetmd.txn.clusterWriteBytes")
+        monkeypatch.setattr(txn_table, "_CLUSTER_WRITE_BYTES", 1)
+        gated = TxnTable(
+            spark, str(tmp_path / "gated"), partition_source="created_at"
+        )
+        gated.merge(batch, key="id", order_col="sequence")
     finally:
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.enabled", "true"
